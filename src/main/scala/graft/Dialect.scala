@@ -5,12 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** Impala-dialect function surface registered onto a SparkSession.
   * Memoized per session — `EngineSession.adopt` runs on every catalog
   * query invocation and re-registering 40+ functions each time would spam
-  * "function replaced" warnings (and waste registry churn).
+  * "function replaced" warnings (and waste registry churn). Weak keys, so
+  * a session-per-client server frees each client's session once it is
+  * dropped.
   */
 object Dialect {
   private val done =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+    java.util.Collections.newSetFromMap(java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
 
   def registerAll(spark: SparkSession): Unit =
     if (done.add(spark)) functions.ImpalaFunctions.register(spark)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Catalog access for the driver-provided TPC-H-ish parquet tables
   * (TESTDATA.md). Mirrors the reference's catalog model (database → table →
@@ -22,142 +23,93 @@ object Tables {
     if (name == "events") normalizeEvents(df) else df
   }
 
-  /** Source-parallelism floor for heavy per-row stages. A parquet file is
-    * splittable only at row-group boundaries, so a single-row-group file
-    * yields ONE input split no matter what maxPartitionBytes says — and
-    * every operator fused into the scan stage (regex stats, shingling,
-    * per-shingle hashing, partial aggregates) then runs on one core while
-    * the rest of the cluster idles. Unless the planned scan has splits in
-    * clear ABUNDANCE (>= 2x the cluster's cores), insert one round-robin
-    * exchange so downstream per-row work distributes; the shuffled bytes
-    * are the (small, that's why it mattered) source itself. At production
-    * scale — many files / many row groups, splits >> cores — this is a
-    * no-op and the plan is unchanged.
-    *
-    * WORKING splits, not planned splits (r11, closing the r10 gate's
-    * 2x-cores ambiguity): planned byte-range splits OVERSTATE a parquet
-    * scan's working parallelism in two ways the r10 distinct-corpus soak
-    * measured, both on a 72 MB / 10-row-group file that planned ~18
-    * splits:
-    *  - rows materialize only in the split containing each ROW GROUP's
-    *    midpoint, so 18 planned splits were 10 working tasks and the
-    *    fused regex-stats stage ran 10-wide (q_text_stats sf3d→sf10d
-    *    alpha 1.59);
-    *  - a pushed-down filter prunes row groups by their min/max stats,
-    *    so a bounded slice (doc_id < 50000) left ONE working row group
-    *    and the whole by-gram kernel ran on one core
-    *    (q_dedup_components 18.9s→83.5s on a slice of IDENTICAL size).
-    * The r10 gate bought protection with an abundance margin (skip only
-    * when planned >= 2x cores) — which over-exchanged scans whose row
-    * groups genuinely abound (a pure tax in the cores..2x band) and
-    * still MISSED the phantom-abundant shape (70 planned splits over a
-    * one-row-group file sail past any planned-count bar). This gate
-    * reads the truth instead: row-group counts from the parquet FOOTERS
-    * of the scan's files (one footer read per file, cached — a metadata
-    * walk, not a scan). Working parallelism = min(planned splits,
-    * row groups); that is exact for an unfiltered scan, so the floor
-    * skips exactly when working >= cores. Footer counts still can't see
-    * FILTER pruning (re-implementing min/max row-group pruning is the
-    * non-goal it was in r10), so a plan with a Filter keeps the 2x
-    * abundance margin on the row-group count — pruning may cut working
-    * groups further, and the margin is the insurance.
-    *
-    * Call it AFTER slicing/selecting (pushdown happens at the scan,
-    * below the exchange) and only ahead of compute-heavy projections:
-    * a plain aggregate over a small scan doesn't need the shuffle.
-    *
-    * Size-gated on the REAL on-disk bytes of the source leaves, not the
-    * CBO estimate. The r9 soak showed why the estimate is the wrong gate
-    * input: `optimizedPlan.stats.sizeInBytes` is scaled by column pruning
-    * and CBO guesses, and the q8 index build at sf1 sat UNDER the old
-    * estimate gate while its one-row-group file sat well over it — the
-    * heavy fused quantization stage ran on one core (inverted scaling,
-    * caught by the curve). FileIndex sizes and footer row-group counts
-    * are facts, not estimates.
-    *
-    * Gate level (r12): TWO floors, by the caller's per-row cost.
-    * [[parallelizedHeavy]] gates at 256 KB for stages whose fused
-    * per-row work is orders of magnitude above scan cost (md5 cascades,
-    * shingle explodes, regex stats): there a few-hundred-KB round-robin
-    * exchange pays for itself immediately — measured at the r12 bench
-    * (sf0.1 documents = 584 KB, one row group), q_text_stats's regex
-    * stage ran 2×1.1 s single-task under the old uniform 4 MB gate and
-    * 0.6 s total with the low floor. The plain [[parallelized]] keeps
-    * the r9 4 MB gate for everything else: the SAME r12 sweep measured
-    * the low floor as a pure tax on light projections (one extra
-    * exchange + stage per kernel re-execution — q_sim_search_lsh 0.65 →
-    * 1.43 s, vocab/sample/mix entries all regressed), because a filter
-    * or bucket-assignment pass costs no more than the shuffle itself.
-    * Both floors are env-overridable (`SPARK_GRAFT_PAR_FLOOR_BYTES`,
-    * `SPARK_GRAFT_PAR_FLOOR_HEAVY_BYTES`) for deployment tuning. */
-  def parallelized(df: DataFrame): DataFrame =
-    parallelizedImpl(df, parFloorBytes)
+  /** Source bytes below which [[parallelized]] leaves a scan alone. */
+  private val FloorBytes = 4L * 1024 * 1024
+  /** Source bytes below which [[parallelizedHeavy]] leaves a scan alone. */
+  private val HeavyFloorBytes = 256L * 1024
+  /** Source bytes per task of a spreading exchange ([[spreadWidth]]). */
+  private val BytesPerTask = 64L * 1024
 
-  /** [[parallelized]] with the low byte gate — for callers fusing
-    * compute-heavy per-row work onto the scan (see gate-level doc). */
-  def parallelizedHeavy(df: DataFrame): DataFrame =
-    parallelizedImpl(df, parFloorHeavyBytes)
+  /** Source-parallelism floor: one round-robin exchange ahead of per-row
+    * work when the scan below would run it on fewer tasks than cores.
+    *
+    * Parquet splits only at row-group boundaries, so a single-row-group
+    * file yields ONE working split however many byte ranges the planner
+    * cuts, and every operator fused into the scan stage runs on one core.
+    * The floor therefore counts working splits as min(planned splits,
+    * row groups), reading the row groups from the parquet footers (one
+    * cached metadata read per file), and skips when they reach the cores.
+    * Footer counts cannot see filter pruning — a pushed-down filter drops
+    * row groups by their min/max stats — so a plan with a Filter must
+    * reach 2 × cores instead.
+    *
+    * Otherwise the floor fires once the source's on-disk bytes (file-index
+    * sizes, not the CBO estimate, which column pruning shrinks) reach the
+    * gate. Gates follow per-row cost: this 4 MB gate suits light work
+    * (filters, bucket assignment), where a smaller source's exchange costs
+    * as much as the work it spreads; [[parallelizedHeavy]]'s 256 KB gate
+    * suits heavy work (md5 cascades, shingle explodes, regex stats). The
+    * exchange is [[spreadWidth]] wide with cap max(cores, planned splits).
+    *
+    * Call it after slicing and selecting (pushdown happens at the scan,
+    * below the exchange). A scan over many files or row groups passes
+    * through unchanged. */
+  def parallelized(df: DataFrame): DataFrame = floored(df, FloorBytes)
 
-  private def parallelizedImpl(df: DataFrame, floorBytes: Long): DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
+  /** [[parallelized]] with the 256 KB gate, for heavy per-row work. */
+  def parallelizedHeavy(df: DataFrame): DataFrame = floored(df, HeavyFloorBytes)
+
+  /** Spread a slim relation ahead of a row explosion AQE cannot see. AQE
+    * coalesces shuffle reads by bytes, so a few-KB aggregate output (capped
+    * LSH buckets) lands on one task even when each row expands into a
+    * quadratic pair list. Always one round-robin exchange, [[spreadWidth]]
+    * wide with cap max(cores, spark.sql.shuffle.partitions); the width is
+    * sized from the source leaves because the relation itself only exists
+    * at run time. The caller guarantees the relation is slim (bucket rows
+    * capped at a maximum id count), since it is shuffled at any scale. */
+  def spread(df: DataFrame): DataFrame =
+    df.repartition(spreadWidth(leafBytes(df), shuffleCap(df)))
+
+  /** [[spread]] for a corpus-sized aggregate output that feeds heavy per-row
+    * work (shingle explodes, per-shingle hash cascades), skipped once the
+    * source reaches cap × spark.sql.adaptive.advisoryPartitionSizeInBytes:
+    * AQE then reads the aggregate output at least cap wide by itself, and
+    * a large corpus pays no extra full shuffle. */
+  def spreadSmall(df: DataFrame): DataFrame = {
+    val cap = shuffleCap(df)
+    val bytes = leafBytes(df)
+    val advisory =
+      df.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (bytes >= BigInt(cap) * advisory) df else df.repartition(spreadWidth(bytes, cap))
+  }
+
+  private def floored(df: DataFrame, gateBytes: Long): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     val parts = df.rdd.getNumPartitions
-    // min(planned, row groups): each row group materializes rows in
-    // exactly one split, and a split materializes at most the groups
-    // whose midpoints it contains — None (non-parquet/local leaves)
-    // falls back to the planned count, the pre-r11 behavior
+    // None (non-parquet or local leaves) falls back to the planned count
     val working = sourceRowGroups(df).fold(parts.toLong)(math.min(parts.toLong, _))
-    // a Filter anywhere in the plan may prune row groups at the scan
-    // (footer min/max stats), invisibly to the footer count — demand
-    // abundance; an unfiltered count is exact, so cores suffice
     val hasFilter = df.queryExecution.optimizedPlan
       .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]).isDefined
     val need = if (hasFilter) 2L * cores else cores.toLong
     if (working >= need) return df
     val bytes = leafBytes(df)
-    if (bytes < floorBytes) return df
-    // Width is volume-aware (r13, VERDICT #2/#5): one task per
-    // SPARK_GRAFT_PAR_FLOOR_TARGET_BYTES (default 64 KB) of source,
-    // clamped to [1, max(cores, planned splits)] — the r12 bare
-    // max(cores, parts) width sprayed a few hundred KB over 32 tasks,
-    // measured as dedup/BM25 entries running FASTER at 8 cores than 32
-    // (pure task-dispatch overhead). The clamp's upper bound keeps it a
-    // floor, never a ceiling (repartition(cores) would cut a 48-working-
-    // split scan to 32 tasks on 32 cores), and any source past
-    // cores×64KB gets exactly the r12 width — at-scale behavior
-    // unchanged, no local constant.
-    val width = (bytes / parFloorTargetBytes + 1)
-      .min(math.max(cores, parts)).max(1).toInt
-    df.repartition(width)
+    if (bytes < gateBytes) df else df.repartition(spreadWidth(bytes, math.max(cores, parts)))
   }
 
-  /** Source bytes per floor task (see [[parallelized]]'s width note). */
-  private[graft] lazy val parFloorTargetBytes: Long =
-    envBytes("SPARK_GRAFT_PAR_FLOOR_TARGET_BYTES", 64L * 1024)
+  /** The one width rule of every spreading exchange: a task per 64 KB of
+    * source, clamped to [1, cap]. A few hundred KB sprayed over dozens of
+    * tasks costs more in task dispatch than it saves, so small sources get
+    * narrow exchanges; the width reaches the cap at cap × 64 KB. With a
+    * floor's cap of max(cores, planned splits), a source between
+    * cores × 64 KB and planned × 64 KB therefore gets more than cores
+    * tasks but fewer than its planned splits. */
+  private def spreadWidth(bytes: BigInt, cap: Int): Int =
+    (bytes / BytesPerTask + 1).min(cap).max(1).toInt
 
-  /** Parse a byte-count env override, failing with a message that names
-    * the variable — a malformed deployment value must not surface as a
-    * bare NumberFormatException at first kernel use (r12 ADVICE). */
-  private[graft] def envBytes(name: String, default: Long): Long =
-    sys.env.get(name).map { v =>
-      try {
-        val n = v.trim.toLong
-        require(n > 0, s"$name must be positive, got '$v'")
-        n
-      } catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$name must be a byte count (long), got '$v'")
-      }
-    }.getOrElse(default)
-
-  /** Minimum source bytes before the parallelism floor inserts its
-    * exchange (see [[parallelized]]'s gate-level doc). */
-  private[graft] lazy val parFloorBytes: Long =
-    envBytes("SPARK_GRAFT_PAR_FLOOR_BYTES", 4L * 1024 * 1024)
-
-  /** The low gate for compute-heavy fused stages ([[parallelizedHeavy]]). */
-  private[graft] lazy val parFloorHeavyBytes: Long =
-    envBytes("SPARK_GRAFT_PAR_FLOOR_HEAVY_BYTES", 256L * 1024)
+  private def shuffleCap(df: DataFrame): Int = {
+    val s = df.sparkSession
+    math.max(s.sparkContext.defaultParallelism, s.sessionState.conf.numShufflePartitions)
+  }
 
   // Footer reads are pure metadata (file immutable within a run); cache by
   // path so each file pays one footer read per JVM.
@@ -224,8 +176,10 @@ object Tables {
   // Temp views are session-global, so memoizing every (session, dir) pair
   // is wrong: after views point at dir B, a call for previously-seen dir A
   // would be skipped and silently read B's data. Track the ONE currently
-  // registered dir per session and re-register whenever it differs.
-  private val registered = new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
+  // registered dir per session and re-register whenever it differs. Weak
+  // keys: tracking a session must not keep it (and its catalog) alive.
+  private val registered =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, String])
 
   /** Idempotent view registration; cheap when `dir` is already current. */
   def ensureViews(spark: SparkSession, dir: String): Unit =

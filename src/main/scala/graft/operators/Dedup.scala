@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Deduplication operators for large-scale training-data pipelines.
   * (Extension surface beyond the reference — BASELINE north star; the
   * reference's only related machinery is DISTINCT aggregation.)
@@ -20,69 +22,6 @@ object Dedup {
   /** Content fingerprint used for exact dedup (md5 of raw text — mirrors
     * what any content-addressed pipeline stores). */
   def fingerprint(text: Column): Column = md5(text)
-
-  /** Redistribute a slim relation ahead of a compute explosion. AQE sizes
-    * post-shuffle partitions by BYTES (coalescing a small aggregate output
-    * to one partition), but the bucket-pair `Generate`s below multiply
-    * rows quadratically per bucket — work AQE cannot see, which at the
-    * r12 bench serialized the whole candidate expansion onto one core
-    * (measured: a 1.6s single-task stage in the minhash kernel). One
-    * round-robin exchange of the bucket rows (≤ maxBucket ids each — the
-    * cap bounds the row, so the shuffle is slim by contract) spreads the
-    * explosion over the cluster.
-    *
-    * Width (r13, VERDICT #2/#5 — the r12 form's bare max(cores, shuffle
-    * width) put 32-way exchanges under kilobytes of bucket rows, measured
-    * as 22 entries running FASTER at 8 cores than 32): volume-aware —
-    * scaled by the kernel's SOURCE bytes (the only size fact available
-    * before execution; the bucket relation itself only exists at runtime)
-    * at one task per `SPARK_GRAFT_WIDEN_TARGET_BYTES` (default 64 KB) of
-    * source, clamped to [1, max(cores, configured shuffle width)]. Tiny
-    * corpora get tiny exchanges; any corpus past cores×64KB gets exactly
-    * the r12 width, so at-scale behavior is unchanged and no local
-    * constant leaks in. */
-  private def widen(df: DataFrame): DataFrame =
-    df.repartition(adaptiveWidth(df))
-
-  /** [[widen]]'s width: clamp(source bytes / target, 1, max(cores,
-    * shuffle width)). */
-  private def adaptiveWidth(df: DataFrame): Int = {
-    val s = df.sparkSession
-    val cap = math.max(s.sparkContext.defaultParallelism,
-      s.sessionState.conf.numShufflePartitions)
-    val want = graft.Tables.leafBytes(df) / widenTargetBytes + 1
-    want.min(cap).max(1).toInt
-  }
-
-  private lazy val widenTargetBytes: Long =
-    graft.Tables.envBytes("SPARK_GRAFT_WIDEN_TARGET_BYTES", 64L * 1024)
-
-  /** Redistribute an aggregate-output relation that FEEDS heavy per-row
-    * work (shingle explodes, per-shingle hash cascades) — the r13 twin of
-    * [[widen]] for compute-heavy (not row-exploding) boundaries. The r13
-    * profile caught the whole portable-minhash signature pipeline running
-    * on ONE task at the bench: the collapse aggregate's output is a few
-    * hundred KB, AQE coalesces its exchange read to one partition, and
-    * everything fused downstream (shingle explode + 16 seeded hash min
-    * aggregations — the kernel's dominant cost) serialized (measured: a
-    * 1.7 s single-task stage in q_dedup_minhash; 2×~0.65 s in
-    * q_contamination's gram pipelines).
-    *
-    * GATED, unlike [[widen]]: this relation is corpus-sized (distinct
-    * texts), so an unconditional exchange would add a full corpus shuffle
-    * at 100 TB for nothing — past `cap × advisoryPartitionSize` source
-    * bytes AQE already reads the aggregate output at least cap wide and
-    * the call is a no-op. Under the gate the moved bytes are bounded by
-    * the gate itself, and the width is volume-aware like [[widen]]'s. */
-  private def distribute(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val cap = math.max(s.sparkContext.defaultParallelism,
-      s.sessionState.conf.numShufflePartitions)
-    val advisory = s.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (graft.Tables.leafBytes(df) >= BigInt(cap) * advisory) df
-    else df.repartition(adaptiveWidth(df))
-  }
 
   /** Exact dedup: keep the lowest-id row per distinct content. Returns the
     * fingerprint table (fp, survivor id, copy count). */
@@ -278,7 +217,7 @@ object Dedup {
       .agg(call_function("top_k_front",
         struct(lit(0.0), col("doc_id")), lit(maxBucket + 1)).as("ids"))
       .filter(size(col("ids")) <= maxBucket)
-    val candidates = widen(buckets)
+    val candidates = Tables.spread(buckets)
       .select(posexplode(col("ids")).as(Seq("i", "a")), col("ids"))
       .select(col("a.doc_id").as("id_a"),
         explode(slice(col("ids"), col("i") + 2, greatest(size(col("ids")) - col("i") - 1, lit(0))))
@@ -405,16 +344,14 @@ object Dedup {
       textCol: String, idCol: String, n: Int = 13): DataFrame = {
     val docKeys = corpus.select(col(idCol).as("doc_id"),
       md5(col(textCol)).as("tkey"))
-    // distribute() both dedup boundaries (r13): the gram explode + per-gram
-    // md5 fuses onto each distinct-aggregate's output, which AQE coalesces
-    // to ~one partition at small volume — the r13 profile measured BOTH
-    // gram pipelines as single-task 0.6–0.7 s stages at sf0.1. No-op at
-    // scale (see distribute).
-    val texts = distribute(corpus.select(md5(col(textCol)).as("tkey"),
+    // spread both dedup boundaries: the gram explode + per-gram md5 fuses
+    // onto each distinct-aggregate's output, which AQE coalesces to ~one
+    // partition at small volume (see Tables.spreadSmall)
+    val texts = Tables.spreadSmall(corpus.select(md5(col(textCol)).as("tkey"),
       col(textCol).as("text")).dropDuplicates("tkey"))
     val textGrams = shingleTable(texts, "text", "tkey", n)
       .select(col("doc_id").as("tkey"), md5(col("sh")).as("h")).distinct()
-    val benchTexts = distribute(benchmark.select(col(textCol).as("text")).distinct()
+    val benchTexts = Tables.spreadSmall(benchmark.select(col(textCol).as("text")).distinct()
       .withColumn("tkey", md5(col("text"))))
     val benchGrams = shingleTable(benchTexts, "text", "tkey", n)
       .select(md5(col("sh")).as("h")).distinct()
@@ -480,7 +417,7 @@ object Dedup {
     // count rides along — the downstream explode then carries `copies`
     // per window row and the old corpus-token-sized wins⨝copies join
     // disappears.
-    val texts = distribute(corpus.groupBy(md5(col(textCol)).as("tkey"))
+    val texts = Tables.spreadSmall(corpus.groupBy(md5(col(textCol)).as("tkey"))
       .agg(count(lit(1)).as("copies"), min(col(textCol)).as("text")))
     val toks = split(lower(trim(col("text"))), "\\s+")
     val wins = texts
@@ -782,12 +719,11 @@ object Dedup {
     val groups = keyed.groupBy(col("__tkey")).agg(
       min(col("doc_id")).as("grp_rep"),
       min_by(col("__text"), col("doc_id")).as("__text"))
-    // distribute() the collapse boundary (r13): the pair kernel fuses its
-    // dominant work — shingle explode + per-shingle hash cascade — onto
-    // this aggregate's output, which AQE coalesces to ~one partition by
-    // bytes (the r13 profile measured the whole signature pipeline as a
-    // 1.7 s single-task stage at sf0.1). No-op at scale (see distribute).
-    val reps = distribute(groups.select(col("grp_rep").as("doc_id"), col("__text")))
+    // spread the collapse boundary: the pair kernel fuses its dominant
+    // work — shingle explode + per-shingle hash cascade — onto this
+    // aggregate's output, which AQE coalesces to ~one partition by bytes
+    // (see Tables.spreadSmall)
+    val reps = Tables.spreadSmall(groups.select(col("grp_rep").as("doc_id"), col("__text")))
     // pairs over representatives: ordered id_a < id_b, so the id_b-side
     // min is "smallest smaller partner" — the one-hop representative rule
     val nbrMin = pairsOfReps(reps)
@@ -843,15 +779,15 @@ object Dedup {
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         lit(0).as("hamming"))
     // cross-group: every member pair inherits its representatives' distance.
-    // The verified side is pinned ([[pinVerified]] — broadcast by default,
-    // deterministic either way); the SECOND join is a merge join, never a
-    // broadcast: its left side is the member-EXPANDED intermediate, whose
-    // row count is Σ over verified pairs of the hpa-side duplicate-group
-    // size — unbounded on a dup-heavy corpus, so a broadcast hint there
-    // (the r12 form) risked an at-scale driver/executor OOM (r12 ADVICE).
-    // A sort-merge join has no build side to flip (deterministic plan) and
+    // The verified side is broadcast (tiny by the kernel's contract, and
+    // the hint keeps AQE's build side deterministic); the SECOND join is a
+    // merge join, never a broadcast: its left side is the member-EXPANDED
+    // intermediate, whose row count is Σ over verified pairs of the
+    // hpa-side duplicate-group size — unbounded on a dup-heavy corpus, so
+    // a broadcast hint there risks running out of memory at scale. A
+    // sort-merge join has no build side to flip (deterministic plan) and
     // spills gracefully at any size.
-    val cross = pinVerified(verified)
+    val cross = broadcast(verified)
       .join(mpk.select(col("hp").as("hpa"), col("doc_id").as("ma")), Seq("hpa"))
       .hint("merge")
       .join(mpk.select(col("hp").as("hpb"), col("doc_id").as("mb")), Seq("hpb"))
@@ -889,39 +825,6 @@ object Dedup {
     * value — the widest slice (bands=2 → 8 hex chars) is 32 bits, so
     * bands never collide and the banding shuffle carries two longs per
     * row instead of two strings. */
-  /** Build-side pin for the hamming-VERIFIED pair relation (and its
-    * gpk-joined image, which stays |verified|-sized — gpk is unique per
-    * fingerprint). Strategy via session conf `graft.simhash.pinStrategy`
-    * (default from `SPARK_GRAFT_SIMHASH_PIN`, else "broadcast"):
-    *
-    *  - "broadcast" (default): the r12 pin. verified is tiny on real
-    *    corpora (hamming-verified near-dup fingerprint pairs), the hint
-    *    makes AQE's otherwise size-race-y build-side choice deterministic,
-    *    and the alternative — broadcasting the corpus-sized fingerprint
-    *    table — is the choice that must never happen at scale.
-    *  - "shuffle": for dup-SATURATED deployments where |verified| itself
-    *    grows past broadcast limits (VERDICT r12 #6) — a merge join: no
-    *    build side to flip (still a deterministic plan), no driver
-    *    collection, spills gracefully at any size.
-    *
-    * Why a deployment lever and not an automatic count gate: verified is
-    * the kernel's most expensive subtree and is consumed lazily — a
-    * count() would re-execute the whole banding/front pipeline, and
-    * persist()+count() would let a bench's timed run read the warm run's
-    * materialized blocks (the cross-run caching this repo bans). The
-    * conf is per-session, so a pipeline can flip it per corpus; both
-    * strategies are proven result-identical by DedupSimhashPinSpec. */
-  private def pinVerified(df: DataFrame): DataFrame = {
-    val strat = df.sparkSession.conf.get("graft.simhash.pinStrategy",
-      sys.env.getOrElse("SPARK_GRAFT_SIMHASH_PIN", "broadcast"))
-    strat match {
-      case "broadcast" => broadcast(df)
-      case "shuffle" => df.hint("merge")
-      case other => throw new IllegalArgumentException(
-        s"graft.simhash.pinStrategy must be broadcast|shuffle, got '$other'")
-    }
-  }
-
   private def simhashVerifiedFpPairs(hashes: DataFrame, maxHamming: Int,
       bands: Int, maxBucket: Int): DataFrame = {
     require(bands > maxHamming, "band collision is complete only for bands > maxHamming")
@@ -942,7 +845,7 @@ object Dedup {
       .agg(call_function("top_k_front",
         struct(lit(0.0), col("hp")), lit(maxBucket + 1)).as("ids"))
       .filter(size(col("ids")) <= maxBucket)
-    widen(buckets)
+    Tables.spread(buckets)
       .select(posexplode(col("ids")).as(Seq("i", "a")), col("ids"))
       .select(col("a.hp").as("hpa"),
         explode(slice(col("ids"), col("i") + 2,
@@ -979,18 +882,17 @@ object Dedup {
     // hexPacked is a bijection of the hex form).
     val gpk = grpRep.select(
       TextAnalysis.hexPacked(col("h")).as("hp"), col("grp_rep"))
-    // pin the VERIFIED side explicitly ([[pinVerified]] — broadcast by
-    // default): it is tiny by the kernel's contract (hamming-verified
-    // survivors), while gpk is corpus-sized (one row per distinct
-    // fingerprint). Without the pin, AQE picks the build side from runtime
-    // sizes that sit near the threshold here, and the AQE-final plan flips
-    // build side / exchange-reuse order between runs — a nondeterministic
-    // plan fingerprint (caught by PlanFingerprintAtScaleSpec at sf0.1),
-    // and at scale the WRONG choice would broadcast the fingerprint table.
-    // (the outer pin re-marks the first join's result — still |verified|
-    // rows, gpk being unique per hp — so BOTH joins build on the pair
-    // side; dup-saturated deployments flip the conf to "shuffle")
-    val e = pinVerified(pinVerified(verified)
+    // broadcast the VERIFIED side explicitly: it is tiny by the kernel's
+    // contract (hamming-verified survivors), while gpk is corpus-sized (one
+    // row per distinct fingerprint). Without the hint, AQE picks the build
+    // side from runtime sizes that sit near the threshold here, and the
+    // AQE-final plan flips build side / exchange-reuse order between runs —
+    // a nondeterministic plan fingerprint (caught by
+    // PlanFingerprintAtScaleSpec at sf0.1), and at scale the WRONG choice
+    // would broadcast the fingerprint table. (The outer hint re-marks the
+    // first join's result — still |verified| rows, gpk being unique per
+    // hp — so BOTH joins build on the pair side.)
+    val e = broadcast(broadcast(verified)
         .join(gpk.select(col("hp").as("hpa"), col("grp_rep").as("ra")), Seq("hpa")))
       .join(gpk.select(col("hp").as("hpb"), col("grp_rep").as("rb")), Seq("hpb"))
     val nbrMin = e.select(col("ra").as("grp_rep"), col("rb").as("cand"))

@@ -215,9 +215,12 @@ object Aggregates {
       .join(broadcast(sketch.select(rf, col("am"))), Seq("l_returnflag"))
       .groupBy(rf)
       .agg(avg((col("l_extendedprice") <= col("am")).cast("double")).as("am_rank"))
+    // both right sides are the planner's build sides already; the hints
+    // keep AQE from flipping a join to whichever 3-row side finishes first
+    // at run time (a timing-dependent AQE-final plan)
     exact
-      .join(sketch, Seq("l_returnflag"))
-      .join(amRank, Seq("l_returnflag"))
+      .join(broadcast(sketch), Seq("l_returnflag"))
+      .join(broadcast(amRank), Seq("l_returnflag"))
       .select(
         rf, col("ndv_part_exact"), col("ndv_order_exact"),
         (col("ap").cast("double") >= col("ndv_part_exact") * ndvLo &&

@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   *     changes another client's semantics (Impala's per-session options
   *     struct, SURVEY §2.12);
   *  3. per-client sessions isolate their CATALOG — two clients pointing
-  *     their views at different data dirs each read their own.
+  *     their views at different data dirs each read their own;
+  *  4. the engine's per-session registries do not keep a dropped client
+  *     session alive.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -101,5 +103,22 @@ class ConcurrencySpec extends SparkSpec {
       assert(counts === Seq(expectA, expectB))
       assert(expectA != expectB, "scale factors unexpectedly equal — test is vacuous")
     } finally pool.shutdown()
+  }
+
+  test("a dropped client session is collectable after adopt and ensureViews") {
+    // in its own frame, so no local of the test body keeps the session
+    def adoptAndDrop(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+      val client = EngineSession.adopt(spark.newSession())
+      Tables.ensureViews(client, dir)
+      new java.lang.ref.WeakReference(client)
+    }
+    val ref = adoptAndDrop()
+    var rounds = 0
+    while (ref.get != null && rounds < 50) {
+      System.gc()
+      Thread.sleep(100)
+      rounds += 1
+    }
+    assert(ref.get == null, "a client session stayed reachable after every reference was dropped")
   }
 }

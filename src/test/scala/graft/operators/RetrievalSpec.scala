@@ -127,4 +127,30 @@ class RetrievalSpec extends SparkSpec {
     assert(!plan.contains("Window"), plan)
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"), plan)
   }
+
+  test("plan: one corpus scan + tokenize pass, shared by the tf and df branches") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import spark.implicits._
+    val helper = new AdaptiveSparkPlanHelper {}
+    val dir = java.nio.file.Files.createTempDirectory("bm25_reuse").toString
+    (1L to 200L).map(i => (i, s"doc $i on data model ${i % 7} and the rest"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val out = Retrieval.bm25TopK(docs, "text", "doc_id", Seq(1 -> "data model", 2 -> "the"), 5)
+    out.collect() // the AQE-final plan, where exchange reuse is decided
+    val plan = out.queryExecution.executedPlan
+    // the df aggregate must read the scoring branch's tf exchange: the
+    // reused subtree is the whole scan -> tokenize -> explode pass
+    val reusedTokenize = helper.collect(plan) { case r: ReusedExchangeExec => r }
+      .filter(r => r.child.exists(_.isInstanceOf[GenerateExec]) &&
+        r.child.exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(reusedTokenize.nonEmpty, plan.toString)
+    // ...and no second copy of that pass runs anywhere else in the plan
+    val tokenizePasses = helper.collect(plan) {
+      case g: GenerateExec if g.exists(_.isInstanceOf[FileSourceScanExec]) => g
+    }
+    assert(tokenizePasses.size === 1, plan.toString)
+  }
 }
