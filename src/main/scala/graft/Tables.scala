@@ -1,8 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Catalog access for the driver-provided TPC-H-ish parquet tables
   * (TESTDATA.md). Mirrors the reference's catalog model (database → table →
@@ -18,9 +26,80 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The table `name` under `dir`, read from `dir/name.parquet`.
+    *
+    * A plain `spark.read.parquet` runs a Spark job to infer the schema from
+    * the file footers on every call. Instead each session resolves a path's
+    * schema once, keeps it in its table-metadata cache, and later loads read
+    * with `spark.read.schema(cached).parquet(path)`: no job, no footer read.
+    * The entry is keyed by the path, the length and modification time of
+    * every file the load lists, and the session's values of the parquet
+    * schema-inference confs ([[InferenceConfs]]). Every load still lists the
+    * path, so when a file is added, removed or rewritten (a `TableSink`
+    * write, an in-place rewrite that changes its length or mtime) or one of
+    * those confs changes, the entry no longer matches and the schema is
+    * inferred again. Every load also
+    * builds a new relation, so each gets fresh expression ids (self-joins
+    * work as with an uncached read). The cache lives as long as its session
+    * and holds one entry per path. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEvents(df) else df
+  }
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val schemas = metadataOf(spark).schemas
+    val confs = InferenceConfs.map(spark.sessionState.conf.getConf(_))
+    val hit = Option(schemas.get(path)).filter(_.confs == confs).flatMap { known =>
+      val df = spark.read.schema(known.schema).parquet(path)
+      if (fileStamps(df.queryExecution.analyzed) == known.files) Some(df) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      schemas.put(path, KnownSchema(fileStamps(df.queryExecution.analyzed), confs, df.schema))
+      df
+    }
+  }
+
+  /** The session confs parquet schema inference reads. */
+  private val InferenceConfs = Seq(
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_BINARY_AS_STRING,
+    SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.PARQUET_SCHEMA_MERGING_ENABLED)
+
+  /** One listed file: an entry read from it holds while these match. */
+  private final case class FileStamp(path: String, len: Long, mtime: Long)
+  private final case class KnownSchema(files: Set[FileStamp], confs: Seq[Boolean], schema: StructType)
+
+  /** A session's table metadata: schemas by table path and parquet row-group
+    * counts by file path, each valid while its file stamps still match. */
+  private final class Metadata {
+    val schemas = new ConcurrentHashMap[String, KnownSchema]
+    val rowGroups = new ConcurrentHashMap[String, (FileStamp, Long)]
+  }
+
+  // Weak keys, as for `registered`: the cache must not keep a dropped
+  // session (or its catalog) alive.
+  private val metadata =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Metadata])
+
+  private def metadataOf(spark: SparkSession): Metadata =
+    metadata.computeIfAbsent(spark, _ => new Metadata)
+
+  private def fileStamps(index: FileIndex): Seq[FileStamp] =
+    index.listFiles(Nil, Nil).flatMap(_.files)
+      .map(f => FileStamp(f.getPath.toString, f.getLen, f.getModificationTime))
+
+  private def fileStamps(plan: LogicalPlan): Set[FileStamp] =
+    plan.collectLeaves().flatMap(parquetIndex).flatMap(fileStamps).toSet
+
+  /** The file index of a parquet file-scan leaf. */
+  private def parquetIndex(leaf: LogicalPlan): Option[FileIndex] = leaf match {
+    case lr: LogicalRelation => lr.relation match {
+      case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] => Some(fs.location)
+      case _ => None
+    }
+    case _ => None
   }
 
   /** Source bytes below which [[parallelized]] leaves a scan alone. */
@@ -85,15 +164,31 @@ object Tables {
 
   private def floored(df: DataFrame, gateBytes: Long): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val parts = df.rdd.getNumPartitions
+    val parts = plannedSplits(df)
     // None (non-parquet or local leaves) falls back to the planned count
     val working = sourceRowGroups(df).fold(parts.toLong)(math.min(parts.toLong, _))
-    val hasFilter = df.queryExecution.optimizedPlan
-      .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]).isDefined
+    val hasFilter = df.queryExecution.optimizedPlan.find(_.isInstanceOf[Filter]).isDefined
     val need = if (hasFilter) 2L * cores else cores.toLong
     if (working >= need) return df
     val bytes = leafBytes(df)
     if (bytes < gateBytes) df else df.repartition(spreadWidth(bytes, math.max(cores, parts)))
+  }
+
+  /** The partitions `df` reads its source in, taken from its own physical
+    * plan: a file scan's splits or a cached relation's blocks, when only
+    * projections and filters sit above that one leaf (the shape of every
+    * floored relation). That is the count `df.rdd.getNumPartitions` gives,
+    * without a second planning pass and its code generation. Any other
+    * shape falls back to `df.rdd`. */
+  private[graft] def plannedSplits(df: DataFrame): Int = {
+    def splits(p: SparkPlan): Option[Int] = p match {
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case s: InMemoryTableScanExec =>
+        Some(s.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions)
+      case _: ProjectExec | _: FilterExec => splits(p.children.head)
+      case _ => None
+    }
+    splits(df.queryExecution.sparkPlan).getOrElse(df.rdd.getNumPartitions)
   }
 
   /** The one width rule of every spreading exchange: a task per 64 KB of
@@ -111,35 +206,27 @@ object Tables {
     math.max(s.sparkContext.defaultParallelism, s.sessionState.conf.numShufflePartitions)
   }
 
-  // Footer reads are pure metadata (file immutable within a run); cache by
-  // path so each file pays one footer read per JVM.
-  private val rowGroupCache = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
   /** Total parquet row groups behind the plan's file-scan leaves, from
-    * the file FOOTERS (a metadata read, not a scan). None when any leaf
-    * is not a parquet file scan (local/cached relations, other formats) —
-    * callers then fall back to planned-split counts. */
+    * the file FOOTERS (a metadata read, not a scan). Each file's count is
+    * kept in the session's table-metadata cache until the file's length or
+    * mtime changes. None when any leaf is not a parquet file scan
+    * (local/cached relations, other formats) — callers then fall back to
+    * planned-split counts. */
   private[graft] def sourceRowGroups(df: DataFrame): Option[Long] = {
-    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val counts = leaves.map {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-              if fs.fileFormat.isInstanceOf[
-                org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
-            Some(fs.location.inputFiles.map { p =>
-              rowGroupCache.computeIfAbsent(p, path => {
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromPath(new org.apache.hadoop.fs.Path(path), conf)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                try r.getRowGroups.size.toLong finally r.close()
-              })
-            }.sum)
-          case _ => None
-        }
-      case _ => None
+    val known = metadataOf(df.sparkSession).rowGroups
+    lazy val conf = df.sparkSession.sessionState.newHadoopConf()
+    def rowGroups(f: FileStamp): Long = Option(known.get(f.path)).collect {
+      case (stamp, n) if stamp == f => n
+    }.getOrElse {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(f.path), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val n = try r.getRowGroups.size.toLong finally r.close()
+      known.put(f.path, (f, n))
+      n
     }
+    val counts = df.queryExecution.optimizedPlan.collectLeaves()
+      .map(parquetIndex(_).map(fileStamps(_).map(rowGroups).sum))
     if (counts.nonEmpty && counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
@@ -149,8 +236,7 @@ object Tables {
     * the materialized size). */
   private[graft] def leafBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.collectLeaves().map {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        BigInt(lr.relation.sizeInBytes)
+      case lr: LogicalRelation => BigInt(lr.relation.sizeInBytes)
       case other => other.stats.sizeInBytes
     }.sum
 
@@ -169,7 +255,9 @@ object Tables {
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
     else df
 
-  /** Register every table as a temp view in `spark`'s catalog. */
+  /** Register every table as a temp view in `spark`'s catalog. This also
+    * fills the session's table-metadata cache (see [[load]]), so the
+    * catalog calls that follow pay no schema-inference job. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *     struct, SURVEY §2.12);
   *  3. per-client sessions isolate their CATALOG — two clients pointing
   *     their views at different data dirs each read their own;
-  *  4. the engine's per-session registries do not keep a dropped client
-  *     session alive.
+  *  4. the engine's per-session registries (views, table metadata) do not
+  *     keep a dropped client session alive.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -110,6 +110,9 @@ class ConcurrencySpec extends SparkSpec {
     def adoptAndDrop(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
       val client = EngineSession.adopt(spark.newSession())
       Tables.ensureViews(client, dir)
+      // fills the session's table-metadata cache (schema and row groups)
+      val docs = Tables.load(client, dir, "documents")
+      assert(Tables.sourceRowGroups(docs).isDefined)
       new java.lang.ref.WeakReference(client)
     }
     val ref = adoptAndDrop()
