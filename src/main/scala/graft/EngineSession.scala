@@ -39,7 +39,18 @@ object EngineSession {
     // natively; read as epoch-nanos LongType and convert explicitly.
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // Our sink side writes timestamps readable by the widest set of readers.
-    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    // Spark's generated-code cache (one LRU per JVM, in 4 segments)
+    // defaults to 100 classes. One sweep of the 134 catalog entries
+    // (sf0.001, local[4]) compiles about 2,000 distinct classes and the six
+    // bi_sql benchmark entries about 80, so at 100 a session that runs more
+    // than a few entries keeps recompiling classes it just evicted. 2500
+    // holds the whole catalog with room for segment skew. Static: Spark
+    // sizes the cache once per JVM, from the session active at the first
+    // compile, so only a session [[build]] creates first in its JVM gets it;
+    // an adopted or pre-existing session cannot take a static conf
+    // ([[adopt]] skips it) and keeps the size its JVM started with.
+    "spark.sql.codegen.cache.maxEntries" -> "2500"
   )
 
   /** Operator-supplied conf overrides: `SPARK_GRAFT_EXTRA_CONF="k=v;k=v"`,

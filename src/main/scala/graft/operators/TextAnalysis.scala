@@ -5,85 +5,99 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis expressions for training-data pipelines: token counting,
   * quality scoring, language-ID heuristics, document fingerprints.
-  * (Extension surface beyond the reference; composed entirely from
-  * codegen'd builtins — no UDFs — so they run inside whole-stage codegen
-  * over a 100 TB scan.)
+  * (Extension surface beyond the reference.)
+  *
+  * The document metrics ([[tokenCount]] through [[langGuess]]) divide
+  * integer counts that one codegen'd kernel,
+  * `text_stats(text, lower(text))` ([[graft.functions.TextStats]]),
+  * computes in a single pass per document. Each metric is the same Column
+  * arithmetic (casts, divisions, rounding) over those counts that it was
+  * over the regex/split/translate builtins the counts replace, so every
+  * value is bit-identical to that composition and the whole projection
+  * stays inside whole-stage codegen. A query that needs several metrics
+  * selects [[textStats]] once and reads them through [[Metrics]], so the
+  * kernel runs once per row; the per-metric functions below build their
+  * own struct.
   */
 object TextAnalysis {
 
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  def tokenCount(text: Column): Column =
-    when(length(trim(text)) === 0, 0).otherwise(size(tokens(text)))
+  /** The one-pass counts of `text`: a struct of `n_chars`, `n_space`,
+    * `n_punct`, `n_digit`, `n_tokens`, `n_bpe`, `n_stop`, `hits_en`,
+    * `hits_de`, `hits_fr`, `hits_es` and `has_zh`; null for null text. */
+  def textStats(text: Column): Column = call_function("text_stats", text, lower(text))
 
-  /** BPE-ish subword proxy: word pieces + standalone punctuation (the
-    * usual `\w+|[^\w\s]` pre-tokenizer shape). */
-  def bpeTokenCount(text: Column): Column = regexp_count(text, lit("\\w+|[^\\w\\s]"))
+  /** What `size` returns for a null array under the session's conf: -1
+    * with legacy sizeOfNull (the engine's ANSI-off default), else null.
+    * The builtin compositions gave null text that value through `size`. */
+  private val sizeOfNull: Column = size(lit(null).cast("array<string>"))
 
-  // Character-class counts via `translate` (single-pass char-map lookup,
-  // ~set membership per char) instead of regexp_replace (regex engine per
-  // char): identical counts for these literal classes, measurably cheaper
-  // on a corpus scan where text ratios run over every byte.
-  private def countChars(text: Column, chars: String): Column =
-    length(text) - length(translate(text, chars, ""))
+  /** The document metrics over one [[textStats]] struct column `st`. */
+  final case class Metrics(st: Column) {
+    private def sized(field: String): Column = coalesce(st(field), sizeOfNull)
+    private def nChars: Column = st("n_chars")
 
-  /** Whitespace set = the Java regex \\s class, so the count matches the
-    * former regexp_replace("\\s+") form exactly. */
-  def avgTokenLen(text: Column): Column =
-    (length(text) - countChars(text, " \t\n\u000B\f\r")).cast("double") / tokenCount(text)
+    def tokenCount: Column = sized("n_tokens")
 
-  def punctRatio(text: Column): Column =
-    countChars(text, ".,;:!?'\"()-").cast("double") / greatest(length(text), lit(1))
+    /** BPE-ish subword proxy: word pieces + standalone punctuation (the
+      * usual `\w+|[^\w\s]` pre-tokenizer shape). */
+    def bpeTokenCount: Column = st("n_bpe")
 
-  def digitRatio(text: Column): Column =
-    countChars(text, "0123456789").cast("double") / greatest(length(text), lit(1))
+    /** Non-whitespace characters (the Java regex \s class) per token. */
+    def avgTokenLen: Column =
+      (nChars - st("n_space")).cast("double") / tokenCount
 
-  def upperRatio(text: Column): Column =
-    countChars(text, ('A' to 'Z').mkString).cast("double") / greatest(length(text), lit(1))
+    def punctRatio: Column =
+      st("n_punct").cast("double") / greatest(nChars, lit(1))
 
-  private val enStop = Seq("the", "a", "of", "and", "to", "in", "is", "it", "that", "for")
+    def digitRatio: Column =
+      st("n_digit").cast("double") / greatest(nChars, lit(1))
 
-  /** Fraction of tokens that are (English) stopwords — a fluency signal. */
-  def stopwordRatio(text: Column): Column =
-    size(filter(tokens(lower(text)), t => t.isin(enStop: _*))).cast("double") /
-      greatest(tokenCount(text), lit(1))
+    /** Fraction of tokens that are (English) stopwords — a fluency signal. */
+    def stopwordRatio: Column =
+      sized("n_stop").cast("double") / greatest(tokenCount, lit(1))
 
-  /** Composite quality score in [0,1]: length-normalized, penalizes
-    * punctuation/digit noise, rewards stopword fluency. The exact weights
-    * are a policy choice; determinism is the requirement. */
-  def qualityScore(text: Column): Column = {
-    val lenScore = least(length(text).cast("double") / 400.0, lit(1.0))
-    val fluency = least(stopwordRatio(text) * 5.0, lit(1.0))
-    val noise = punctRatio(text) + digitRatio(text)
-    greatest(lit(0.0), least(lit(1.0),
-      lenScore * 0.4 + fluency * 0.4 + (lit(0.2) - least(noise, lit(0.2)))))
+    /** Composite quality score in [0,1]: length-normalized, penalizes
+      * punctuation/digit noise, rewards stopword fluency. The exact weights
+      * are a policy choice; determinism is the requirement. */
+    def qualityScore: Column = {
+      val lenScore = least(nChars.cast("double") / 400.0, lit(1.0))
+      val fluency = least(stopwordRatio * 5.0, lit(1.0))
+      val noise = punctRatio + digitRatio
+      greatest(lit(0.0), least(lit(1.0),
+        lenScore * 0.4 + fluency * 0.4 + (lit(0.2) - least(noise, lit(0.2)))))
+    }
+
+    /** N-gram-frequency language-ID heuristic: scores per-language marker
+      * sets (the distinct markers found as whole words) and takes the
+      * argmax, 'und' when nothing matches. */
+    def langGuess: Column = {
+      val en = sized("hits_en")
+      val de = sized("hits_de")
+      val fr = sized("hits_fr")
+      val es = sized("hits_es")
+      val zh = when(st("has_zh"), 5).otherwise(0)
+      when(greatest(en, de, fr, es, zh) === 0, "und")
+        .when(zh >= greatest(en, de, fr, es), "zh")
+        .when(de > greatest(en, fr, es), "de")
+        .when(fr > greatest(en, es), "fr")
+        .when(es > en, "es")
+        .otherwise("en")
+    }
   }
 
-  /** N-gram-frequency language-ID heuristic: scores per-language marker
-    * sets and takes the argmax, 'und' when nothing matches. Pure CASE/regexp
-    * composition so it pushes into codegen (and mirrors into plain SQL). */
-  def langGuess(text: Column): Column = {
-    val t = lower(text)
-    // one regex pass per language: |distinct markers matched| equals the
-    // sum of per-marker indicators (each contributes 0/1), so results are
-    // bit-identical to the per-word rlike form while scanning the text 5×
-    // less (word boundaries disambiguate prefix overlaps like a/and)
-    def hits(words: Seq[String]): Column =
-      size(array_distinct(regexp_extract_all(
-        t, lit("\\b(" + words.mkString("|") + ")\\b"), lit(1))))
-    val en = hits(Seq("the", "and", "of", "is", "a"))
-    val de = hits(Seq("der", "die", "das", "und", "ist"))
-    val fr = hits(Seq("le", "la", "et", "est", "les"))
-    val es = hits(Seq("el", "los", "es", "y", "que"))
-    val zh = when(t.rlike("[\\u4e00-\\u9fff]"), 5).otherwise(0)
-    when(greatest(en, de, fr, es, zh) === 0, "und")
-      .when(zh >= greatest(en, de, fr, es), "zh")
-      .when(de > greatest(en, fr, es), "de")
-      .when(fr > greatest(en, es), "fr")
-      .when(es > en, "es")
-      .otherwise("en")
-  }
+  private def metrics(text: Column): Metrics = Metrics(textStats(text))
+
+  def tokenCount(text: Column): Column = metrics(text).tokenCount
+  def bpeTokenCount(text: Column): Column = metrics(text).bpeTokenCount
+  def avgTokenLen(text: Column): Column = metrics(text).avgTokenLen
+  def punctRatio(text: Column): Column = metrics(text).punctRatio
+  def digitRatio(text: Column): Column = metrics(text).digitRatio
+  def stopwordRatio(text: Column): Column = metrics(text).stopwordRatio
+  def qualityScore(text: Column): Column = metrics(text).qualityScore
+  def langGuess(text: Column): Column = metrics(text).langGuess
 
   /** 64-bit document fingerprint: FNV over the normalized token stream
     * (whitespace-collapsed lowercase) — a rolling-hash-style content id

@@ -341,20 +341,23 @@ object LlmOps {
     FROM pairs"""
 
   /** Text analysis: token counts, ratios, quality, language-ID — mirrored
-    * in DuckDB with equivalent regex/list SQL. */
+    * in DuckDB with equivalent regex/list SQL. The `text_stats` struct is
+    * selected once and every metric reads its fields, so the kernel runs
+    * once per row. */
   def qTextStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallelizedHeavy(Tables.load(spark, dir, "documents"))
-    val t = col("text")
-    docs.select(
+    val m = TextAnalysis.Metrics(col("st"))
+    docs.select(col("doc_id"), col("lang"), TextAnalysis.textStats(col("text")).as("st"))
+      .select(
         col("doc_id"),
         col("lang"),
-        TextAnalysis.tokenCount(t).as("n_tokens"),
-        TextAnalysis.bpeTokenCount(t).cast("long").as("n_bpe"),
-        round(TextAnalysis.avgTokenLen(t), 6).as("avg_tok_len"),
-        round(TextAnalysis.stopwordRatio(t), 6).as("stop_ratio"),
-        round(TextAnalysis.punctRatio(t), 6).as("punct_ratio"),
-        round(TextAnalysis.qualityScore(t), 6).as("quality"),
-        TextAnalysis.langGuess(t).as("lang_guess"))
+        m.tokenCount.as("n_tokens"),
+        m.bpeTokenCount.cast("long").as("n_bpe"),
+        round(m.avgTokenLen, 6).as("avg_tok_len"),
+        round(m.stopwordRatio, 6).as("stop_ratio"),
+        round(m.punctRatio, 6).as("punct_ratio"),
+        round(m.qualityScore, 6).as("quality"),
+        m.langGuess.as("lang_guess"))
       .orderBy(col("doc_id"))
   }
 
