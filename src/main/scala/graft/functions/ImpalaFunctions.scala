@@ -143,8 +143,9 @@ object ImpalaFunctions {
     "cosine_similarity" -> { case Seq(a, b) => CosineSimilarity(a, b) },
     "dot_product_q8" -> { case Seq(a, b) => DotProductQ8(a, b) },
     "quantize_q8" -> { case Seq(v) => QuantizeQ8(v) },
-    // ---- codegen'd document-statistics kernel (TextAnalysis metrics) ----
-    "text_stats" -> { case Seq(t, lt) => TextStats(t, lt) },
+    // ---- codegen'd document-statistics kernels (TextAnalysis metrics) ----
+    "text_stats" -> { case Seq(t) => TextStats(t) },
+    "text_lexicon" -> { case Seq(lt) => TextLexicon(lt) },
 
     // ---- variance aliases (BuiltinsDb.java registers variance_pop/
     // variance_samp alongside var_pop/var_samp; Spark only ships the

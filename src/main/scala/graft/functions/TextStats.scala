@@ -2,19 +2,20 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The document-statistics kernel behind `TextAnalysis`' metrics: one pass
-  * over a document's UTF-8 bytes (and one over its lowercased form)
-  * yields every integer count the metrics divide, callable from
-  * interpreted eval AND generated Java (top-level object → static
-  * forwarders).
+/** The document-statistics kernels behind `TextAnalysis`' metrics, callable
+  * from interpreted eval AND generated Java (top-level object → static
+  * forwarders). [[stats]] makes one pass over a document's UTF-8 bytes;
+  * [[lexicon]] matches words in its lowercased form. They are separate so
+  * a metric that reads no word match (`tokenCount`, say) costs neither
+  * `lower` nor the marker scan.
   *
   * Each count equals what the builtin composition it replaces returns, so
-  * the metrics' doubles stay bit-identical:
+  * the metrics' doubles stay bit-identical. From [[stats]]`(text)`:
   *  - `n_chars` = `length(text)`: code points, stepped by UTF-8 lead byte
   *    exactly as `UTF8String.numChars` steps;
   *  - `n_space`, `n_punct`, `n_digit` = `length(text) -
@@ -25,7 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (limit −1 keeps a leading or trailing empty piece);
   *  - `n_bpe` = `regexp_count(text, "\\w+|[^\\w\\s]")`: ASCII word runs
   *    (`\w` is `[A-Za-z0-9_]` without UNICODE_CHARACTER_CLASS) plus every
-  *    other non-`\s` code point, a supplementary one counting once;
+  *    other non-`\s` code point, a supplementary one counting once.
+  *
+  * From [[lexicon]]`(lower(text))`:
   *  - `n_stop` = the pieces of `split(trim(lower), "\\s+")` that are one of
   *    the ten English stopwords;
   *  - `hits_*` = `size(array_distinct(regexp_extract_all(lower,
@@ -38,9 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextStatsKernel {
 
-  val schema: StructType = StructType(
-    Seq("n_chars", "n_space", "n_punct", "n_digit", "n_tokens", "n_bpe", "n_stop",
-      "hits_en", "hits_de", "hits_fr", "hits_es")
+  val statsSchema: StructType = StructType(
+    Seq("n_chars", "n_space", "n_punct", "n_digit", "n_tokens", "n_bpe")
+      .map(StructField(_, IntegerType, nullable = false)))
+
+  val lexiconSchema: StructType = StructType(
+    Seq("n_stop", "hits_en", "hits_de", "hits_fr", "hits_es")
       .map(StructField(_, IntegerType, nullable = false)) :+
       StructField("has_zh", BooleanType, nullable = false))
 
@@ -85,16 +91,8 @@ object TextStatsKernel {
   private val matchers = ThreadLocal.withInitial[java.util.regex.Matcher](
     () => markerPattern.matcher("").useTransparentBounds(true))
 
-  /** A zero-copy char view of an all-ASCII string for the matcher. */
-  private final class AsciiChars(u: UTF8String) extends CharSequence {
-    override def length: Int = u.numBytes
-    override def charAt(i: Int): Char = u.getByte(i).toChar
-    override def subSequence(start: Int, end: Int): CharSequence = toString.substring(start, end)
-    override def toString: String = u.toString
-  }
-
-  /** The counts of `text`, given Spark's own `lower(text)` as `lowered`. */
-  def stats(text: UTF8String, lowered: UTF8String): InternalRow = {
+  /** The character and token counts of `text` ([[statsSchema]]). */
+  def stats(text: UTF8String): InternalRow = {
     val n = text.numBytes
     var s = 0
     while (s < n && text.getByte(s) == ' ') s += 1
@@ -121,9 +119,14 @@ object TextStatsKernel {
       i += (if (b >= 0) 1 else UTF8String.numBytesForFirstByte(b))
     }
     val tokens = if (s == e) 0 else runs + 1
+    new GenericInternalRow(Array[Any](chars, space, punct, digit, tokens, bpe))
+  }
+
+  /** The word matches of `lowered`, Spark's own `lower(text)`
+    * ([[lexiconSchema]]). */
+  def lexicon(lowered: UTF8String): InternalRow = {
     val hits = markerHits(lowered)
-    new GenericInternalRow(Array[Any](chars, space, punct, digit, tokens, bpe,
-      stopwordCount(lowered), Integer.bitCount(hits & 0x1f),
+    new GenericInternalRow(Array[Any](stopwordCount(lowered), Integer.bitCount(hits & 0x1f),
       Integer.bitCount(hits & (0x1f << 5)), Integer.bitCount(hits & (0x1f << 10)),
       Integer.bitCount(hits & (0x1f << 15)), (hits & (1 << 20)) != 0))
   }
@@ -165,78 +168,97 @@ object TextStatsKernel {
   /** Bit `k` set when marker `k` occurs as a whole word in `t`; bit 20 when
     * `t` holds a code point in U+4E00..U+9FFF. */
   private def markerHits(t: UTF8String): Int = {
-    val cs: CharSequence = if (t.isFullAscii) new AsciiChars(t) else t.toString
-    val m = matchers.get().reset(cs)
-    val n = cs.length
+    val s = t.toString
+    val m = matchers.get().reset(s)
+    val n = s.length
     var hits = 0
     var i = 0
     while (i < n) {
-      val c = cs.charAt(i)
+      val c = s.charAt(i)
       if (c >= '\u4e00' && c <= '\u9fff') hits |= 1 << 20
-      // An ASCII word character before an ASCII letter is never a `\b`,
-      // so only other positions can start a whole-word marker.
-      if (c < 128 && (i == 0 || !isAsciiWord(cs.charAt(i - 1))) && startsMarker(cs, i)) {
+      // An ASCII word character beside an ASCII letter is never a `\b`,
+      // so a whole-word marker starts only after a non-word character and
+      // ends only before one; the matcher decides the rest.
+      if (c < 128 && (i == 0 || !isAsciiWord(s.charAt(i - 1))) && mayStartMarker(s, i)) {
         m.region(i, n)
-        if (m.lookingAt()) hits |= 1 << markerAt(cs, i, m.end() - i)
+        if (m.lookingAt()) hits |= 1 << markerAt(s, i, m.end() - i)
       }
       i += 1
     }
-    m.reset("") // hold no reference to the row's bytes between calls
+    m.reset("") // hold no reference to the row's text between calls
     hits
   }
 
   @inline private def isAsciiWord(c: Char): Boolean =
     c < 128 && (asciiClass(c) & Word) != 0
 
-  private def startsMarker(cs: CharSequence, i: Int): Boolean = {
+  /** The markers by first character (all markers are ASCII). */
+  private val markersByFirst: Array[Array[String]] =
+    Array.tabulate(128)(c => markers.filter(_.charAt(0) == c))
+
+  /** Some marker occurs at `i` with no ASCII word character after it. */
+  private def mayStartMarker(s: String, i: Int): Boolean = {
+    val ms = markersByFirst(s.charAt(i))
     var k = 0
-    while (k < markers.length) {
-      if (regionEquals(cs, i, markers(k))) return true
+    while (k < ms.length) {
+      val end = i + ms(k).length
+      if (s.startsWith(ms(k), i) && (end == s.length || !isAsciiWord(s.charAt(end)))) return true
       k += 1
     }
     false
   }
 
   /** The marker of length `len` at `i` (unique: equal length, same text). */
-  private def markerAt(cs: CharSequence, i: Int, len: Int): Int = {
+  private def markerAt(s: String, i: Int, len: Int): Int = {
     var k = 0
-    while (markers(k).length != len || !regionEquals(cs, i, markers(k))) k += 1
+    while (markers(k).length != len || !s.startsWith(markers(k), i)) k += 1
     k
-  }
-
-  private def regionEquals(cs: CharSequence, i: Int, w: String): Boolean = {
-    if (i + w.length > cs.length) return false
-    var j = 0
-    while (j < w.length && cs.charAt(i + j) == w.charAt(j)) j += 1
-    j == w.length
   }
 }
 
-/** `text_stats(text, lower(text))` — every count `TextAnalysis`' document
-  * metrics need, from one codegen'd pass ([[TextStatsKernel]]) instead of
-  * a dozen regex, split and translate builtins. The lowercased text is a
-  * child so Spark's own `lower` decides case mapping. Null when either
-  * input is null. */
-case class TextStats(left: Expression, right: Expression) extends BinaryExpression {
+/** `text_stats(text)` — the character and token counts `TextAnalysis`'
+  * document metrics divide, from one codegen'd pass
+  * ([[TextStatsKernel.stats]]) instead of regex, split and translate
+  * builtins. Null for null text. */
+case class TextStats(child: Expression) extends UnaryExpression {
 
-  override def dataType: DataType = TextStatsKernel.schema
+  override def dataType: DataType = TextStatsKernel.statsSchema
   override def prettyName: String = "text_stats"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): TypeCheckResult = TextStats.stringInput(this, child)
+
+  override def nullSafeEval(t: Any): Any = TextStatsKernel.stats(t.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${TextStats.kernel}.stats($t)")
+
+  override protected def withNewChildInternal(c: Expression): TextStats = copy(child = c)
+}
+
+object TextStats {
+  private[functions] val kernel: String = classOf[TextStatsKernel.type].getName.stripSuffix("$")
+
+  private[functions] def stringInput(e: Expression, child: Expression): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, string), got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
+      s"${e.prettyName} expects a string, got ${child.dataType.catalogString}")
+}
 
-  override def nullSafeEval(t: Any, lt: Any): Any =
-    TextStatsKernel.stats(t.asInstanceOf[UTF8String], lt.asInstanceOf[UTF8String])
+/** `text_lexicon(lower(text))` — the stopword count, per-language marker
+  * hits and CJK flag of `TextAnalysis`' fluency and language metrics
+  * ([[TextStatsKernel.lexicon]]). The argument is the lowercased text, so
+  * Spark's own `lower` decides case mapping. Null for null input. */
+case class TextLexicon(child: Expression) extends UnaryExpression {
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = classOf[TextStatsKernel.type].getName.stripSuffix("$")
-    defineCodeGen(ctx, ev, (t, lt) => s"$k.stats($t, $lt)")
-  }
+  override def dataType: DataType = TextStatsKernel.lexiconSchema
+  override def prettyName: String = "text_lexicon"
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TextStats =
-    copy(left = l, right = r)
+  override def checkInputDataTypes(): TypeCheckResult = TextStats.stringInput(this, child)
+
+  override def nullSafeEval(t: Any): Any = TextStatsKernel.lexicon(t.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${TextStats.kernel}.lexicon($t)")
+
+  override protected def withNewChildInternal(c: Expression): TextLexicon = copy(child = c)
 }

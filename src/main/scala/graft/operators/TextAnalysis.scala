@@ -8,16 +8,17 @@ import org.apache.spark.sql.functions._
   * (Extension surface beyond the reference.)
   *
   * The document metrics ([[tokenCount]] through [[langGuess]]) divide
-  * integer counts that one codegen'd kernel,
-  * `text_stats(text, lower(text))` ([[graft.functions.TextStats]]),
-  * computes in a single pass per document. Each metric is the same Column
-  * arithmetic (casts, divisions, rounding) over those counts that it was
-  * over the regex/split/translate builtins the counts replace, so every
-  * value is bit-identical to that composition and the whole projection
-  * stays inside whole-stage codegen. A query that needs several metrics
-  * selects [[textStats]] once and reads them through [[Metrics]], so the
-  * kernel runs once per row; the per-metric functions below build their
-  * own struct.
+  * integer counts from two codegen'd kernels ([[graft.functions.TextStats]]):
+  * `text_stats(text)` counts characters and tokens in one pass, and
+  * `text_lexicon(lower(text))` counts stopwords and language markers. Each
+  * metric is the same Column arithmetic (casts, divisions, rounding) over
+  * those counts that it was over the regex/split/translate builtins the
+  * counts replace, so every value is bit-identical to that composition and
+  * the whole projection stays inside whole-stage codegen. A query that
+  * needs several metrics selects [[textStats]] and [[textLexicon]] once and
+  * reads them through [[Metrics]], so each kernel runs once per row. The
+  * per-metric functions below build their own kernel calls, and only the
+  * ones they read: [[tokenCount]] runs no `lower` and no word matching.
   */
 object TextAnalysis {
 
@@ -25,21 +26,25 @@ object TextAnalysis {
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
   /** The one-pass counts of `text`: a struct of `n_chars`, `n_space`,
-    * `n_punct`, `n_digit`, `n_tokens`, `n_bpe`, `n_stop`, `hits_en`,
+    * `n_punct`, `n_digit`, `n_tokens` and `n_bpe`; null for null text. */
+  def textStats(text: Column): Column = call_function("text_stats", text)
+
+  /** The word matches of `lower(text)`: a struct of `n_stop`, `hits_en`,
     * `hits_de`, `hits_fr`, `hits_es` and `has_zh`; null for null text. */
-  def textStats(text: Column): Column = call_function("text_stats", text, lower(text))
+  def textLexicon(text: Column): Column = call_function("text_lexicon", lower(text))
 
   /** What `size` returns for a null array under the session's conf: -1
     * with legacy sizeOfNull (the engine's ANSI-off default), else null.
     * The builtin compositions gave null text that value through `size`. */
   private val sizeOfNull: Column = size(lit(null).cast("array<string>"))
 
-  /** The document metrics over one [[textStats]] struct column `st`. */
-  final case class Metrics(st: Column) {
-    private def sized(field: String): Column = coalesce(st(field), sizeOfNull)
+  /** The document metrics over a [[textStats]] struct column `st` and a
+    * [[textLexicon]] struct column `lex` of the same text. */
+  final case class Metrics(st: Column, lex: Column) {
+    private def sized(field: Column): Column = coalesce(field, sizeOfNull)
     private def nChars: Column = st("n_chars")
 
-    def tokenCount: Column = sized("n_tokens")
+    def tokenCount: Column = sized(st("n_tokens"))
 
     /** BPE-ish subword proxy: word pieces + standalone punctuation (the
       * usual `\w+|[^\w\s]` pre-tokenizer shape). */
@@ -57,7 +62,7 @@ object TextAnalysis {
 
     /** Fraction of tokens that are (English) stopwords — a fluency signal. */
     def stopwordRatio: Column =
-      sized("n_stop").cast("double") / greatest(tokenCount, lit(1))
+      sized(lex("n_stop")).cast("double") / greatest(tokenCount, lit(1))
 
     /** Composite quality score in [0,1]: length-normalized, penalizes
       * punctuation/digit noise, rewards stopword fluency. The exact weights
@@ -74,11 +79,11 @@ object TextAnalysis {
       * sets (the distinct markers found as whole words) and takes the
       * argmax, 'und' when nothing matches. */
     def langGuess: Column = {
-      val en = sized("hits_en")
-      val de = sized("hits_de")
-      val fr = sized("hits_fr")
-      val es = sized("hits_es")
-      val zh = when(st("has_zh"), 5).otherwise(0)
+      val en = sized(lex("hits_en"))
+      val de = sized(lex("hits_de"))
+      val fr = sized(lex("hits_fr"))
+      val es = sized(lex("hits_es"))
+      val zh = when(lex("has_zh"), 5).otherwise(0)
       when(greatest(en, de, fr, es, zh) === 0, "und")
         .when(zh >= greatest(en, de, fr, es), "zh")
         .when(de > greatest(en, fr, es), "de")
@@ -88,7 +93,7 @@ object TextAnalysis {
     }
   }
 
-  private def metrics(text: Column): Metrics = Metrics(textStats(text))
+  private def metrics(text: Column): Metrics = Metrics(textStats(text), textLexicon(text))
 
   def tokenCount(text: Column): Column = metrics(text).tokenCount
   def bpeTokenCount(text: Column): Column = metrics(text).bpeTokenCount

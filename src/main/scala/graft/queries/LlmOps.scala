@@ -341,13 +341,14 @@ object LlmOps {
     FROM pairs"""
 
   /** Text analysis: token counts, ratios, quality, language-ID — mirrored
-    * in DuckDB with equivalent regex/list SQL. The `text_stats` struct is
-    * selected once and every metric reads its fields, so the kernel runs
-    * once per row. */
+    * in DuckDB with equivalent regex/list SQL. The `text_stats` and
+    * `text_lexicon` structs are selected once and every metric reads their
+    * fields, so each kernel runs once per row. */
   def qTextStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallelizedHeavy(Tables.load(spark, dir, "documents"))
-    val m = TextAnalysis.Metrics(col("st"))
-    docs.select(col("doc_id"), col("lang"), TextAnalysis.textStats(col("text")).as("st"))
+    val m = TextAnalysis.Metrics(col("st"), col("lex"))
+    docs.select(col("doc_id"), col("lang"), TextAnalysis.textStats(col("text")).as("st"),
+        TextAnalysis.textLexicon(col("text")).as("lex"))
       .select(
         col("doc_id"),
         col("lang"),

@@ -1,19 +1,21 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.TextStats
+import graft.functions.{TextLexicon, TextStats}
 import graft.queries.LlmOps
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Lower}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-/** Differential test of the `text_stats` kernel: every `TextAnalysis`
-  * document metric must equal, row for row and bit for bit, the builtin
-  * composition it was before the kernel ([[TextStatsSpec.Reference]]), on
-  * edge cases, generated strings and the benchmark corpus, under
-  * whole-stage codegen and interpreted evaluation alike. */
+/** Differential test of the `text_stats` and `text_lexicon` kernels: every
+  * `TextAnalysis` document metric must equal, row for row and bit for bit,
+  * the builtin composition it was before the kernels
+  * ([[TextStatsSpec.Reference]]), on edge cases, generated strings and the
+  * benchmark corpus, under whole-stage codegen and interpreted evaluation
+  * alike. */
 class TextStatsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import TextStatsSpec.Reference
 
@@ -141,24 +143,50 @@ class TextStatsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     walk(stage.child)
   }
 
-  test("q_text_stats plans one text_stats call inside whole-stage codegen, no fallback") {
+  /** Kernel calls in `ps`' expressions: (text_stats, text_lexicon). */
+  private def kernelCalls(ps: Seq[SparkPlan]): (Int, Int) = {
+    val es = ps.flatMap(_.expressions)
+    (es.map(_.collect { case e: TextStats => e }.size).sum,
+      es.map(_.collect { case e: TextLexicon => e }.size).sum)
+  }
+
+  /** Distinct calls of each kernel and of `lower` in `plan`'s expressions
+    * (a metric repeats a kernel's struct in its tree; Spark's
+    * subexpression elimination evaluates each distinct call once). */
+  private def distinctCalls(plan: SparkPlan): (Int, Int, Int) = {
+    val es = collect(plan) { case p => p.expressions }.flatten
+    def n(pf: PartialFunction[Expression, Expression]) =
+      es.flatMap(_.collect(pf)).map(_.canonicalized).distinct.size
+    (n { case e: TextStats => e }, n { case e: TextLexicon => e }, n { case e: Lower => e })
+  }
+
+  test("q_text_stats plans one call of each kernel inside whole-stage codegen, no fallback") {
     val df = LlmOps.qTextStats(spark, corpusDir)
     df.collect()
     val plan = df.queryExecution.executedPlan
     val allExprs = collect(plan) { case p => p.expressions }.flatten
     val fallbacks = allExprs.flatMap(_.collect { case e: CodegenFallback => e.prettyName })
     assert(fallbacks.isEmpty, s"CodegenFallback expressions: ${fallbacks.mkString(", ")}")
-    def calls(ps: Seq[SparkPlan]) =
-      ps.flatMap(_.expressions).map(_.collect { case e: TextStats => e }.size).sum
-    val inCodegen = calls(collect(plan) { case s: WholeStageCodegenExec => fused(s) }.flatten)
-    assert(calls(collect(plan) { case p => p }) === 1, plan.toString)
-    assert(inCodegen === 1, plan.toString)
+    val inCodegen = kernelCalls(collect(plan) { case s: WholeStageCodegenExec => fused(s) }.flatten)
+    assert(kernelCalls(collect(plan) { case p => p }) === ((1, 1)), plan.toString)
+    assert(inCodegen === ((1, 1)), plan.toString)
+  }
+
+  test("a single metric plans only the kernels it reads; lower() only for text_lexicon") {
+    val texts = textFrame(Seq("the cat"))
+    // (text_stats, text_lexicon, lower) per metric, in metricNames order
+    val expected = Seq((1, 0, 0), (1, 0, 0), (1, 0, 0), (1, 1, 1), (1, 0, 0), (1, 0, 0),
+      (1, 1, 1), (0, 1, 1))
+    metricNames.zip(metrics(col("text"))).zip(expected).foreach { case ((name, m), calls) =>
+      val plan = texts.select(m).queryExecution.executedPlan
+      assert(distinctCalls(plan) === calls, s"$name: $plan")
+    }
   }
 }
 
 object TextStatsSpec {
 
-  /** The builtin compositions the `text_stats` metrics replaced, kept as
+  /** The builtin compositions the kernel metrics replaced, kept as
     * the differential reference. */
   object Reference {
     private def tokens(text: Column): Column = split(trim(text), "\\s+")
