@@ -1,9 +1,11 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
@@ -71,11 +73,20 @@ object Tables {
   private final case class FileStamp(path: String, len: Long, mtime: Long)
   private final case class KnownSchema(files: Set[FileStamp], confs: Seq[Boolean], schema: StructType)
 
-  /** A session's table metadata: schemas by table path and parquet row-group
-    * counts by file path, each valid while its file stamps still match. */
+  /** A plan with its parquet leaves replaced by their output, and the read
+    * options of each leaf. It holds no session, so a cache entry cannot keep
+    * one alive. */
+  private final case class PlanKey(plan: LogicalPlan, options: Seq[Map[String, String]])
+  private final case class KnownRows(files: Seq[Set[FileStamp]], rows: Array[Row])
+
+  /** A session's table metadata: schemas by table path, parquet row-group
+    * counts by file path and collected corpus statistics by plan, each valid
+    * while its file stamps still match. A changed file replaces its path's or
+    * plan's entry, so a long-lived session holds one entry of each. */
   private final class Metadata {
     val schemas = new ConcurrentHashMap[String, KnownSchema]
     val rowGroups = new ConcurrentHashMap[String, (FileStamp, Long)]
+    val statistics = new ConcurrentHashMap[PlanKey, KnownRows]
   }
 
   // Weak keys, as for `registered`: the cache must not keep a dropped
@@ -100,6 +111,38 @@ object Tables {
       case _ => None
     }
     case _ => None
+  }
+
+  /** The rows of `df`, a small deterministic statistic of a corpus (an ANN
+    * index's per-dimension means, say), collected once per session while
+    * its plan and the files behind it are unchanged: a later call for the
+    * same plan reads the kept rows and runs no Spark job. The entry is keyed
+    * by `df`'s canonicalized plan, the notion of "same query" Spark's
+    * CacheManager matches cached data by, with each parquet leaf replaced by
+    * its output and read options, and holds while the stamps of the files
+    * each leaf lists still match. A different filter, projection or source
+    * therefore collects into its own entry, and a rewritten, added or
+    * removed file collects again. A plan with a nondeterministic expression
+    * or a leaf that is not a parquet file scan is collected on every call. */
+  private[graft] def collectOnce(df: DataFrame): Array[Row] = {
+    val plan = df.queryExecution.analyzed
+    val leaves = plan.collectLeaves().map {
+      case lr: LogicalRelation => parquetIndex(lr).map(i => lr -> i)
+      case _ => None
+    }
+    if (leaves.exists(_.isEmpty) || plan.find(_.expressions.exists(!_.deterministic)).isDefined)
+      return df.collect()
+    val scans = leaves.flatten
+    val key = PlanKey(
+      plan.transform { case lr: LogicalRelation => LocalRelation(lr.output) }.canonicalized,
+      scans.map(_._1.relation.asInstanceOf[HadoopFsRelation].options))
+    val files = scans.map { case (_, index) => fileStamps(index).toSet }
+    val known = metadataOf(df.sparkSession).statistics
+    Option(known.get(key)).filter(_.files == files).map(_.rows).getOrElse {
+      val rows = df.collect()
+      known.put(key, KnownRows(files, rows))
+      rows
+    }
   }
 
   /** Source bytes below which [[parallelized]] leaves a scan alone. */
@@ -257,9 +300,26 @@ object Tables {
 
   /** Register every table as a temp view in `spark`'s catalog. This also
     * fills the session's table-metadata cache (see [[load]]), so the
-    * catalog calls that follow pay no schema-inference job. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+    * catalog calls that follow pay no schema-inference job.
+    *
+    * The tables load concurrently, one thread each, so their schema
+    * inferences overlap instead of running one job at a time; the views are
+    * then registered in [[all]] order on the calling thread. Every load is
+    * awaited; if any failed, the first failure in [[all]] order is rethrown
+    * and no view is registered. */
+  def registerAll(spark: SparkSession, dir: String): Unit = {
+    val pool = Executors.newFixedThreadPool(all.size)
+    val loads = try pool.invokeAll(all.map { n =>
+      new Callable[DataFrame] {
+        def call(): DataFrame = {
+          SparkSession.setActiveSession(spark)
+          load(spark, dir, n)
+        }
+      }
+    }.asJava).asScala finally pool.shutdown()
+    val dfs = loads.map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    all.zip(dfs).foreach { case (n, df) => df.createOrReplaceTempView(n) }
+  }
 
   // Temp views are session-global, so memoizing every (session, dir) pair
   // is wrong: after views point at dir B, a call for previously-seen dir A

@@ -145,6 +145,7 @@ object ImpalaFunctions {
     "quantize_q8" -> { case Seq(v) => QuantizeQ8(v) },
     // ---- codegen'd document-statistics kernels (TextAnalysis metrics) ----
     "text_stats" -> { case Seq(t) => TextStats(t) },
+    "text_stopwords" -> { case Seq(lt) => TextStopwords(lt) },
     "text_lexicon" -> { case Seq(lt) => TextLexicon(lt) },
 
     // ---- variance aliases (BuiltinsDb.java registers variance_pop/

@@ -10,9 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The document-statistics kernels behind `TextAnalysis`' metrics, callable
   * from interpreted eval AND generated Java (top-level object → static
   * forwarders). [[stats]] makes one pass over a document's UTF-8 bytes;
-  * [[lexicon]] matches words in its lowercased form. They are separate so
-  * a metric that reads no word match (`tokenCount`, say) costs neither
-  * `lower` nor the marker scan.
+  * [[stopwords]] and [[lexicon]] match words in its lowercased form. They
+  * are separate so a metric pays only for the counts it reads: `tokenCount`
+  * costs neither `lower` nor a word match, and `stopwordRatio` no marker
+  * scan.
   *
   * Each count equals what the builtin composition it replaces returns, so
   * the metrics' doubles stay bit-identical. From [[stats]]`(text)`:
@@ -28,9 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (`\w` is `[A-Za-z0-9_]` without UNICODE_CHARACTER_CLASS) plus every
   *    other non-`\s` code point, a supplementary one counting once.
   *
+  * [[stopwords]]`(lower(text))` = the pieces of `split(trim(lower),
+  * "\\s+")` that are one of the ten English stopwords.
+  *
   * From [[lexicon]]`(lower(text))`:
-  *  - `n_stop` = the pieces of `split(trim(lower), "\\s+")` that are one of
-  *    the ten English stopwords;
   *  - `hits_*` = `size(array_distinct(regexp_extract_all(lower,
   *    "\\b(m1|…|m5)\\b", 1)))` per language: the distinct markers that
   *    occur as a whole word;
@@ -46,7 +48,7 @@ object TextStatsKernel {
       .map(StructField(_, IntegerType, nullable = false)))
 
   val lexiconSchema: StructType = StructType(
-    Seq("n_stop", "hits_en", "hits_de", "hits_fr", "hits_es")
+    Seq("hits_en", "hits_de", "hits_fr", "hits_es")
       .map(StructField(_, IntegerType, nullable = false)) :+
       StructField("has_zh", BooleanType, nullable = false))
 
@@ -122,17 +124,18 @@ object TextStatsKernel {
     new GenericInternalRow(Array[Any](chars, space, punct, digit, tokens, bpe))
   }
 
-  /** The word matches of `lowered`, Spark's own `lower(text)`
+  /** The marker matches of `lowered`, Spark's own `lower(text)`
     * ([[lexiconSchema]]). */
   def lexicon(lowered: UTF8String): InternalRow = {
     val hits = markerHits(lowered)
-    new GenericInternalRow(Array[Any](stopwordCount(lowered), Integer.bitCount(hits & 0x1f),
+    new GenericInternalRow(Array[Any](Integer.bitCount(hits & 0x1f),
       Integer.bitCount(hits & (0x1f << 5)), Integer.bitCount(hits & (0x1f << 10)),
       Integer.bitCount(hits & (0x1f << 15)), (hits & (1 << 20)) != 0))
   }
 
-  /** Pieces of `split(trim(t), "\\s+")` equal to a stopword. */
-  private def stopwordCount(t: UTF8String): Int = {
+  /** Pieces of `split(trim(t), "\\s+")` equal to a stopword, for `t` =
+    * Spark's own `lower(text)`. */
+  def stopwords(t: UTF8String): Int = {
     val n = t.numBytes
     var s = 0
     while (s < n && t.getByte(s) == ' ') s += 1
@@ -244,10 +247,29 @@ object TextStats {
       s"${e.prettyName} expects a string, got ${child.dataType.catalogString}")
 }
 
-/** `text_lexicon(lower(text))` — the stopword count, per-language marker
-  * hits and CJK flag of `TextAnalysis`' fluency and language metrics
-  * ([[TextStatsKernel.lexicon]]). The argument is the lowercased text, so
-  * Spark's own `lower` decides case mapping. Null for null input. */
+/** `text_stopwords(lower(text))` — the English stopword count of
+  * `TextAnalysis`' fluency metrics ([[TextStatsKernel.stopwords]]). The
+  * argument is the lowercased text, so Spark's own `lower` decides case
+  * mapping. Null for null input. */
+case class TextStopwords(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "text_stopwords"
+
+  override def checkInputDataTypes(): TypeCheckResult = TextStats.stringInput(this, child)
+
+  override def nullSafeEval(t: Any): Any = TextStatsKernel.stopwords(t.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${TextStats.kernel}.stopwords($t)")
+
+  override protected def withNewChildInternal(c: Expression): TextStopwords = copy(child = c)
+}
+
+/** `text_lexicon(lower(text))` — the per-language marker hits and CJK flag
+  * of `TextAnalysis`' language metric ([[TextStatsKernel.lexicon]]). The
+  * argument is the lowercased text, so Spark's own `lower` decides case
+  * mapping. Null for null input. */
 case class TextLexicon(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = TextStatsKernel.lexiconSchema

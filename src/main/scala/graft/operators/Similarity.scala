@@ -96,13 +96,15 @@ object Similarity {
   }
 
   /** Per-dimension corpus mean (one 64-row aggregate, driver-collected —
-    * the LSH analogue of IVF's centroid fit). */
-  private def dimMeans(corpus: DataFrame, vecCol: String): Array[Double] =
-    corpus.select(posexplode(col(vecCol)).as(Seq("i", "x")))
+    * the LSH analogue of IVF's centroid fit). A session collects it once per
+    * corpus ([[graft.Tables.collectOnce]]): a later call over the same
+    * corpus plan and unchanged files runs no Spark job. */
+  private[graft] def dimMeans(corpus: DataFrame, vecCol: String): Array[Double] =
+    graft.Tables.collectOnce(corpus.select(posexplode(col(vecCol)).as(Seq("i", "x")))
       .groupBy(col("i")).agg(avg(col("x").cast("double")).as("m"))
-      .orderBy(col("i")).collect().map(_.getDouble(1))
+      .orderBy(col("i"))).map(_.getDouble(1))
 
-  private def planeThresholds(mean: Array[Double], planes: Int, dims: Int, table: Int): Seq[Double] =
+  private[graft] def planeThresholds(mean: Array[Double], planes: Int, dims: Int, table: Int): Seq[Double] =
     (0 until planes).map { p =>
       planeWeight(table * planes + p, dims).zip(mean).map { case (a, b) => a * b }.sum
     }
@@ -123,13 +125,21 @@ object Similarity {
     * same two complementary buckets — measured on the synthetic corpus:
     * tables=1/2/4 yield byte-identical candidate sets. Cross-cluster
     * neighbors are then unreachable by ANY sign-LSH configuration; use
-    * the IVF variant (data-adaptive centroids, nProbe>1) for that regime. */
+    * the IVF variant (data-adaptive centroids, nProbe>1) for that regime.
+    *
+    * Ids are unique on each side: `idCol` names one row of `queries` and one
+    * row of `corpus`. With one table the bucket join then yields each
+    * (query, candidate) pair at most once — a query's probe buckets are
+    * pairwise distinct and a corpus vector has exactly one bucket — so the
+    * scored pairs go to the top-k as they are. With several tables a pair
+    * can collide in more than one, and a (query_id, cand_id) aggregate
+    * dedups it first. */
   def lshTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, planes: Int = 6, dims: Int = 64,
       multiProbe: Boolean = true, tables: Int = 1): DataFrame = {
-    // mean-centered hashing (see lshBucket doc): one tiny aggregate up
-    // front, then thresholds are plan-time literals
+    // mean-centered hashing (see lshBucket doc): one tiny aggregate per
+    // session and corpus, then thresholds are plan-time literals
     val mean = dimMeans(corpus, vecCol)
     val thrs = (0 until tables).map(t => planeThresholds(mean, planes, dims, t))
     // query probes: per table, own bucket (+ hamming-1 flips when probing)
@@ -145,12 +155,11 @@ object Similarity {
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
       explode(array((0 until tables).map(t =>
         lshBucket(col(vecCol), planes, dims, t, thrs(t))): _*)).as("bucket"))
-    val deduped = c.join(broadcast(q), Seq("bucket"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      // a pair can collide in several tables/probes — dedup before ranking
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(max(col("sim")).as("sim"))
-    frontTopK(deduped, k)
+    val scored = c.join(broadcast(q), Seq("bucket"))
+      .select(col("query_id"), col("cand_id"), cosine(col("qv"), col("cv")).as("sim"))
+    // a pair can collide in several tables — dedup before ranking
+    frontTopK(if (tables == 1) scored
+      else scored.groupBy(col("query_id"), col("cand_id")).agg(max(col("sim")).as("sim")), k)
   }
 
   /** Per-vector int8 scalar quantization (asymmetric affine, the

@@ -8,17 +8,19 @@ import org.apache.spark.sql.functions._
   * (Extension surface beyond the reference.)
   *
   * The document metrics ([[tokenCount]] through [[langGuess]]) divide
-  * integer counts from two codegen'd kernels ([[graft.functions.TextStats]]):
-  * `text_stats(text)` counts characters and tokens in one pass, and
-  * `text_lexicon(lower(text))` counts stopwords and language markers. Each
-  * metric is the same Column arithmetic (casts, divisions, rounding) over
-  * those counts that it was over the regex/split/translate builtins the
-  * counts replace, so every value is bit-identical to that composition and
-  * the whole projection stays inside whole-stage codegen. A query that
-  * needs several metrics selects [[textStats]] and [[textLexicon]] once and
-  * reads them through [[Metrics]], so each kernel runs once per row. The
-  * per-metric functions below build their own kernel calls, and only the
-  * ones they read: [[tokenCount]] runs no `lower` and no word matching.
+  * integer counts from three codegen'd kernels
+  * ([[graft.functions.TextStats]]): `text_stats(text)` counts characters
+  * and tokens in one pass, `text_stopwords(lower(text))` counts stopwords
+  * and `text_lexicon(lower(text))` language markers. Each metric is the
+  * same Column arithmetic (casts, divisions, rounding) over those counts
+  * that it was over the regex/split/translate builtins the counts replace,
+  * so every value is bit-identical to that composition and the whole
+  * projection stays inside whole-stage codegen. A query that needs several
+  * metrics selects [[textStats]], [[stopwordCount]] and [[textLexicon]]
+  * once and reads them through [[Metrics]], so each kernel runs once per
+  * row. The per-metric functions below build their own kernel calls, and
+  * only the ones they read: [[tokenCount]] runs no `lower` and no word
+  * matching, [[stopwordRatio]] no marker scan.
   */
 object TextAnalysis {
 
@@ -29,8 +31,12 @@ object TextAnalysis {
     * `n_punct`, `n_digit`, `n_tokens` and `n_bpe`; null for null text. */
   def textStats(text: Column): Column = call_function("text_stats", text)
 
-  /** The word matches of `lower(text)`: a struct of `n_stop`, `hits_en`,
-    * `hits_de`, `hits_fr`, `hits_es` and `has_zh`; null for null text. */
+  /** The English stopwords among the whitespace tokens of `lower(text)`;
+    * null for null text. */
+  def stopwordCount(text: Column): Column = call_function("text_stopwords", lower(text))
+
+  /** The marker matches of `lower(text)`: a struct of `hits_en`, `hits_de`,
+    * `hits_fr`, `hits_es` and `has_zh`; null for null text. */
   def textLexicon(text: Column): Column = call_function("text_lexicon", lower(text))
 
   /** What `size` returns for a null array under the session's conf: -1
@@ -38,9 +44,10 @@ object TextAnalysis {
     * The builtin compositions gave null text that value through `size`. */
   private val sizeOfNull: Column = size(lit(null).cast("array<string>"))
 
-  /** The document metrics over a [[textStats]] struct column `st` and a
-    * [[textLexicon]] struct column `lex` of the same text. */
-  final case class Metrics(st: Column, lex: Column) {
+  /** The document metrics over a [[textStats]] struct column `st`, a
+    * [[stopwordCount]] column `nStop` and a [[textLexicon]] struct column
+    * `lex` of the same text. */
+  final case class Metrics(st: Column, nStop: Column, lex: Column) {
     private def sized(field: Column): Column = coalesce(field, sizeOfNull)
     private def nChars: Column = st("n_chars")
 
@@ -62,7 +69,7 @@ object TextAnalysis {
 
     /** Fraction of tokens that are (English) stopwords — a fluency signal. */
     def stopwordRatio: Column =
-      sized(lex("n_stop")).cast("double") / greatest(tokenCount, lit(1))
+      sized(nStop).cast("double") / greatest(tokenCount, lit(1))
 
     /** Composite quality score in [0,1]: length-normalized, penalizes
       * punctuation/digit noise, rewards stopword fluency. The exact weights
@@ -93,7 +100,8 @@ object TextAnalysis {
     }
   }
 
-  private def metrics(text: Column): Metrics = Metrics(textStats(text), textLexicon(text))
+  private def metrics(text: Column): Metrics =
+    Metrics(textStats(text), stopwordCount(text), textLexicon(text))
 
   def tokenCount(text: Column): Column = metrics(text).tokenCount
   def bpeTokenCount(text: Column): Column = metrics(text).bpeTokenCount

@@ -341,13 +341,14 @@ object LlmOps {
     FROM pairs"""
 
   /** Text analysis: token counts, ratios, quality, language-ID — mirrored
-    * in DuckDB with equivalent regex/list SQL. The `text_stats` and
-    * `text_lexicon` structs are selected once and every metric reads their
-    * fields, so each kernel runs once per row. */
+    * in DuckDB with equivalent regex/list SQL. The `text_stats`,
+    * `text_stopwords` and `text_lexicon` kernels are selected once and every
+    * metric reads their values, so each kernel runs once per row. */
   def qTextStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallelizedHeavy(Tables.load(spark, dir, "documents"))
-    val m = TextAnalysis.Metrics(col("st"), col("lex"))
+    val m = TextAnalysis.Metrics(col("st"), col("n_stop"), col("lex"))
     docs.select(col("doc_id"), col("lang"), TextAnalysis.textStats(col("text")).as("st"),
+        TextAnalysis.stopwordCount(col("text")).as("n_stop"),
         TextAnalysis.textLexicon(col("text")).as("lex"))
       .select(
         col("doc_id"),

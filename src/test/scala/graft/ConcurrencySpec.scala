@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *     struct, SURVEY §2.12);
   *  3. per-client sessions isolate their CATALOG — two clients pointing
   *     their views at different data dirs each read their own;
-  *  4. the engine's per-session registries (views, table metadata) do not
-  *     keep a dropped client session alive.
+  *  4. the engine's per-session registries (views, table metadata, corpus
+  *     statistics) do not keep a dropped client session alive.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -113,14 +113,23 @@ class ConcurrencySpec extends SparkSpec {
       // fills the session's table-metadata cache (schema and row groups)
       val docs = Tables.load(client, dir, "documents")
       assert(Tables.sourceRowGroups(docs).isDefined)
+      // and its collected corpus statistics (the LSH dim-means)
+      val emb = Tables.load(client, dir, "embeddings")
+      operators.Similarity.lshTopK(emb.filter(col("vec_id") < 10),
+        emb.filter(col("vec_id") >= 10), "vec_id", "embedding", 3)
       new java.lang.ref.WeakReference(client)
     }
     val ref = adoptAndDrop()
-    var rounds = 0
-    while (ref.get != null && rounds < 50) {
+    // lshTopK's dim-means aggregate runs adaptive query stages. Spark's
+    // stage pools (QueryStageCreator, shuffle-exchange,
+    // ResultQueryStageExecution) start threads on demand that inherit the
+    // client as their active session and keep them for 60 s when idle, so
+    // the deadline covers that keep-alive; an engine registry holding the
+    // session would keep it past any deadline.
+    val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
+    while (ref.get != null && System.nanoTime() < deadline) {
       System.gc()
-      Thread.sleep(100)
-      rounds += 1
+      Thread.sleep(500)
     }
     assert(ref.get == null, "a client session stayed reachable after every reference was dropped")
   }

@@ -8,8 +8,9 @@ package graft
   * broadcast of an unbounded side) fails here instead of surfacing as an
   * OOM at scale. The emitted query itself is never executed; note that a
   * few entries do run real work while CONSTRUCTING their plan (lshTopK
-  * collects corpus dim-means, ivfTopK fits KMeans, sink entries write
-  * fixtures), so this spec is cheap but not entirely side-effect-free. */
+  * collects corpus dim-means on a session's first call per corpus,
+  * ivfTopK fits KMeans, sink entries write fixtures), so this spec is
+  * cheap but not entirely side-effect-free. */
 class PlanHygieneSpec extends SparkSpec {
 
   /** Entries whose nested-loop join is the DESIGN, each with a bounded

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.{TextLexicon, TextStats}
+import graft.functions.{TextLexicon, TextStats, TextStopwords}
 import graft.queries.LlmOps
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Lower}
@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodege
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-/** Differential test of the `text_stats` and `text_lexicon` kernels: every
+/** Differential test of the `text_stats`, `text_stopwords` and
+  * `text_lexicon` kernels: every
   * `TextAnalysis` document metric must equal, row for row and bit for bit,
   * the builtin composition it was before the kernels
   * ([[TextStatsSpec.Reference]]), on edge cases, generated strings and the
@@ -143,21 +144,24 @@ class TextStatsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     walk(stage.child)
   }
 
-  /** Kernel calls in `ps`' expressions: (text_stats, text_lexicon). */
-  private def kernelCalls(ps: Seq[SparkPlan]): (Int, Int) = {
+  /** Kernel calls in `ps`' expressions: (text_stats, text_stopwords,
+    * text_lexicon). */
+  private def kernelCalls(ps: Seq[SparkPlan]): (Int, Int, Int) = {
     val es = ps.flatMap(_.expressions)
     (es.map(_.collect { case e: TextStats => e }.size).sum,
+      es.map(_.collect { case e: TextStopwords => e }.size).sum,
       es.map(_.collect { case e: TextLexicon => e }.size).sum)
   }
 
   /** Distinct calls of each kernel and of `lower` in `plan`'s expressions
     * (a metric repeats a kernel's struct in its tree; Spark's
     * subexpression elimination evaluates each distinct call once). */
-  private def distinctCalls(plan: SparkPlan): (Int, Int, Int) = {
+  private def distinctCalls(plan: SparkPlan): (Int, Int, Int, Int) = {
     val es = collect(plan) { case p => p.expressions }.flatten
     def n(pf: PartialFunction[Expression, Expression]) =
       es.flatMap(_.collect(pf)).map(_.canonicalized).distinct.size
-    (n { case e: TextStats => e }, n { case e: TextLexicon => e }, n { case e: Lower => e })
+    (n { case e: TextStats => e }, n { case e: TextStopwords => e },
+      n { case e: TextLexicon => e }, n { case e: Lower => e })
   }
 
   test("q_text_stats plans one call of each kernel inside whole-stage codegen, no fallback") {
@@ -168,15 +172,16 @@ class TextStatsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val fallbacks = allExprs.flatMap(_.collect { case e: CodegenFallback => e.prettyName })
     assert(fallbacks.isEmpty, s"CodegenFallback expressions: ${fallbacks.mkString(", ")}")
     val inCodegen = kernelCalls(collect(plan) { case s: WholeStageCodegenExec => fused(s) }.flatten)
-    assert(kernelCalls(collect(plan) { case p => p }) === ((1, 1)), plan.toString)
-    assert(inCodegen === ((1, 1)), plan.toString)
+    assert(kernelCalls(collect(plan) { case p => p }) === ((1, 1, 1)), plan.toString)
+    assert(inCodegen === ((1, 1, 1)), plan.toString)
   }
 
-  test("a single metric plans only the kernels it reads; lower() only for text_lexicon") {
+  test("a metric plans only the kernels it reads; lower() for word kernels") {
     val texts = textFrame(Seq("the cat"))
-    // (text_stats, text_lexicon, lower) per metric, in metricNames order
-    val expected = Seq((1, 0, 0), (1, 0, 0), (1, 0, 0), (1, 1, 1), (1, 0, 0), (1, 0, 0),
-      (1, 1, 1), (0, 1, 1))
+    // (text_stats, text_stopwords, text_lexicon, lower) per metric, in
+    // metricNames order: the stopword metrics plan no marker scan
+    val expected = Seq((1, 0, 0, 0), (1, 0, 0, 0), (1, 0, 0, 0), (1, 1, 0, 1), (1, 0, 0, 0),
+      (1, 0, 0, 0), (1, 1, 0, 1), (0, 0, 1, 1))
     metricNames.zip(metrics(col("text"))).zip(expected).foreach { case ((name, m), calls) =>
       val plan = texts.select(m).queryExecution.executedPlan
       assert(distinctCalls(plan) === calls, s"$name: $plan")
