@@ -76,9 +76,9 @@ object Bench {
         // Cache hygiene: drop whatever earlier entries persisted (cluster
         // tables, pipeline stage boundaries) so this entry's number does
         // not inherit cross-entry block-manager pressure — sweep numbers
-        // stay comparable to the isolated re-runs. Entries that rely on a
-        // memoized persisted table re-materialize it lazily during the
-        // untimed first run below (LlmOps.cachedClusters / pipelineCache).
+        // stay comparable to the isolated re-runs. Entries that persist a
+        // stage boundary re-materialize it during the untimed first run
+        // below (Tables.persistOnce).
         spark.catalog.clearCache()
         // per-query warm pass at the smallest SF: compiles the generated
         // code and loads file metadata, so the timed run measures the
@@ -125,8 +125,9 @@ object Bench {
     isolateSet.foreach { name =>
       val fn = SparkEntry.queries(name)
       try {
-        // same hygiene as the sweep: clear, one untimed run to rebuild any
-        // entry-local persisted state, then time the steady state
+        // same hygiene as the sweep: clear, one untimed run to
+        // re-materialize any persisted stage boundary, then time the
+        // steady state
         spark.catalog.clearCache()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         isolated(name) = (1 to 2).map { _ =>

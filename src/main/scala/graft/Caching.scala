@@ -62,93 +62,3 @@ object Caching {
   /** Drop from the cache (uncache/evict). */
   def release(df: DataFrame): Unit = df.unpersist()
 }
-
-/** Persist-policy advisor — the cache-manager ACCOUNTING role of the
-  * reference's dfs_cache (be/src/dfs_cache/cache-mgr.h: an LRU file
-  * cache with capacity planning and per-file access tracking; the
-  * "which files deserve local disk" decision). On Spark the MECHANISM —
-  * persist + BlockManager LRU eviction — already exists, so what was
-  * left of the reference's feature was the POLICY: observe what a
-  * workload actually scans, and decide what to pin under a byte budget.
-  * This class is that policy surface, closing the one SURVEY §2.1 row
-  * that stayed "partial" through r9.
-  *
-  * Usage: call [[record]] with each workload plan (cheap: walks the
-  * optimized plan's leaves, no execution); ask [[advise]] for the
-  * persist set under a budget (greedy by re-read bytes saved — a
-  * relation read H times from cold storage wastes (H−1)·bytes, so value
-  * density is H−1 and the greedy knapsack ranks by hits, packing while
-  * the budget holds); ask [[evictions]] for the LRU drop list when the
-  * resident set overruns the budget (the reference's eviction order,
-  * cache-mgr.cc LRU list). Deliberately advisory: callers apply the
-  * advice with [[Caching.cached]]/[[Caching.release]] so plans stay
-  * unchanged unless a deployment opts in.
-  */
-final class CacheAdvisor {
-  import scala.collection.mutable
-
-  /** One tracked source relation (keyed by its root paths). */
-  final case class Usage(paths: String, bytes: Long, hits: Long, lastSeen: Long)
-
-  private val ledger = mutable.LinkedHashMap[String, Usage]()
-  private var clock = 0L
-
-  /** Observe a plan: every file-backed leaf counts one hit at the current
-    * logical time, with real FileIndex bytes (facts, not estimates). */
-  def record(df: DataFrame): Unit = synchronized {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    df.queryExecution.optimizedPlan.collectLeaves().foreach {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          val key = fs.location.rootPaths.map(_.toString).sorted.mkString(",")
-          clock += 1
-          val prev = ledger.get(key)
-          ledger.put(key, Usage(key, fs.location.sizeInBytes,
-            prev.map(_.hits).getOrElse(0L) + 1, clock))
-        case _ => ()
-      }
-      case _ => ()
-    }
-  }
-
-  /** Current ledger, most-recently-seen first. */
-  def usages: Seq[Usage] = synchronized {
-    ledger.values.toSeq.sortBy(-_.lastSeen)
-  }
-
-  /** Persist set under `budgetBytes`: greedy knapsack by re-read savings
-    * (hits − 1 is the value density; single-hit relations save nothing
-    * and are never advised). Deterministic: ties break on bytes desc,
-    * then path. */
-  def advise(budgetBytes: Long): Seq[Usage] = synchronized {
-    var left = budgetBytes
-    ledger.values.toSeq
-      .filter(_.hits > 1)
-      .sortBy(u => (-u.hits, -u.bytes, u.paths))
-      .flatMap { u =>
-        if (u.bytes <= left) { left -= u.bytes; Some(u) } else None
-      }
-  }
-
-  /** LRU eviction order for a resident set that exceeds `budgetBytes`:
-    * drop least-recently-seen first until the remainder fits — the
-    * reference's cache-mgr eviction walk. Paths the ledger never recorded
-    * have UNKNOWN size, so their contribution to the resident total is
-    * unverifiable: counting them as 0 would let a 10 GB unknown resident
-    * "fit" any budget and the walk would evict nothing. They are evicted
-    * unconditionally (an unseen path is infinitely cold — there is no
-    * recorded evidence it is worth keeping) and the LRU walk then runs on
-    * the known remainder, whose sizes are facts. */
-  def evictions(resident: Seq[String], budgetBytes: Long): Seq[String] = synchronized {
-    val (unknown, known) = resident.partition(p => ledger.get(p).isEmpty)
-    var total = known.map(ledger(_).bytes).sum
-    val out = mutable.ArrayBuffer[String](unknown: _*)
-    val it = known.sortBy(ledger(_).lastSeen).iterator
-    while (total > budgetBytes && it.hasNext) {
-      val p = it.next()
-      out += p
-      total -= ledger(p).bytes
-    }
-    out.toSeq
-  }
-}

@@ -74,9 +74,6 @@ object Ddl {
   def refresh(spark: SparkSession, table: String): Unit =
     spark.sql(s"REFRESH TABLE $table")
 
-  /** `SHOW TABLES [IN db]` passthrough. */
-  def showTables(spark: SparkSession): DataFrame = spark.sql("SHOW TABLES")
-
   /** `SHOW CREATE TABLE t` (ToSqlUtils.java in the reference FE): the
     * re-creatable DDL text. */
   def showCreateTable(spark: SparkSession, table: String): String =

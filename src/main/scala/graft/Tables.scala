@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Catalog access for the driver-provided TPC-H-ish parquet tables
   * (TESTDATA.md). Mirrors the reference's catalog model (database → table →
@@ -80,13 +81,17 @@ object Tables {
   private final case class KnownRows(files: Seq[Set[FileStamp]], rows: Array[Row])
 
   /** A session's table metadata: schemas by table path, parquet row-group
-    * counts by file path and collected corpus statistics by plan, each valid
-    * while its file stamps still match. A changed file replaces its path's or
-    * plan's entry, so a long-lived session holds one entry of each. */
+    * counts by file path, collected corpus statistics by plan and the file
+    * stamps of persisted stage boundaries by plan, each valid while its file
+    * stamps still match. A changed file replaces its path's or plan's entry,
+    * so a long-lived session holds one entry of each. The boundaries' data
+    * lives in Spark's cache; this map holds no DataFrame, since one holds its
+    * session and would keep the weak key below alive. */
   private final class Metadata {
     val schemas = new ConcurrentHashMap[String, KnownSchema]
     val rowGroups = new ConcurrentHashMap[String, (FileStamp, Long)]
     val statistics = new ConcurrentHashMap[PlanKey, KnownRows]
+    val persisted = new ConcurrentHashMap[PlanKey, Seq[Set[FileStamp]]]
   }
 
   // Weak keys, as for `registered`: the cache must not keep a dropped
@@ -113,36 +118,87 @@ object Tables {
     case _ => None
   }
 
-  /** The rows of `df`, a small deterministic statistic of a corpus (an ANN
-    * index's per-dimension means, say), collected once per session while
-    * its plan and the files behind it are unchanged: a later call for the
-    * same plan reads the kept rows and runs no Spark job. The entry is keyed
-    * by `df`'s canonicalized plan, the notion of "same query" Spark's
-    * CacheManager matches cached data by, with each parquet leaf replaced by
-    * its output and read options, and holds while the stamps of the files
-    * each leaf lists still match. A different filter, projection or source
-    * therefore collects into its own entry, and a rewritten, added or
-    * removed file collects again. A plan with a nondeterministic expression
-    * or a leaf that is not a parquet file scan is collected on every call. */
-  private[graft] def collectOnce(df: DataFrame): Array[Row] = {
+  /** `df`'s plan key and the stamps of the files each parquet leaf lists:
+    * the canonicalized plan, the notion of "same query" Spark's CacheManager
+    * matches cached data by, with each parquet leaf replaced by its output
+    * and read options. None when the plan has a nondeterministic expression
+    * or a leaf that is not a parquet file scan. */
+  private def stamped(df: DataFrame): Option[(PlanKey, Seq[Set[FileStamp]])] = {
     val plan = df.queryExecution.analyzed
     val leaves = plan.collectLeaves().map {
       case lr: LogicalRelation => parquetIndex(lr).map(i => lr -> i)
       case _ => None
     }
     if (leaves.exists(_.isEmpty) || plan.find(_.expressions.exists(!_.deterministic)).isDefined)
-      return df.collect()
+      return None
     val scans = leaves.flatten
     val key = PlanKey(
       plan.transform { case lr: LogicalRelation => LocalRelation(lr.output) }.canonicalized,
       scans.map(_._1.relation.asInstanceOf[HadoopFsRelation].options))
-    val files = scans.map { case (_, index) => fileStamps(index).toSet }
-    val known = metadataOf(df.sparkSession).statistics
-    Option(known.get(key)).filter(_.files == files).map(_.rows).getOrElse {
-      val rows = df.collect()
-      known.put(key, KnownRows(files, rows))
-      rows
+    Some(key -> scans.map { case (_, index) => fileStamps(index).toSet })
+  }
+
+  /** The rows of `df`, a small deterministic statistic of a corpus (an ANN
+    * index's per-dimension means, say), collected once per session while
+    * its plan and the files behind it are unchanged: a later call for the
+    * same plan reads the kept rows and runs no Spark job. The entry is keyed
+    * by [[stamped]]'s plan key and holds while the stamps of the files each
+    * leaf lists still match. A different filter, projection or source
+    * therefore collects into its own entry, and a rewritten, added or
+    * removed file collects again. A plan the key rejects is collected on
+    * every call. */
+  private[graft] def collectOnce(df: DataFrame): Array[Row] = stamped(df) match {
+    case None => df.collect()
+    case Some((key, files)) =>
+      val known = metadataOf(df.sparkSession).statistics
+      Option(known.get(key)).filter(_.files == files).map(_.rows).getOrElse {
+        val rows = df.collect()
+        known.put(key, KnownRows(files, rows))
+        rows
+      }
+  }
+
+  /** The stage boundary `boundary(spark)`, which several consumers read,
+    * persisted and materialized once per session while its plan and the
+    * files behind it are unchanged. The entry is keyed and stamped as in
+    * [[collectOnce]]. On a miss or a changed stamp the plan is first
+    * unpersisted: Spark's CacheManager is shared by every session and
+    * matches a parquet leaf by its root path, not its contents, so a copy
+    * persisted before a rewrite, by this session or another, would
+    * otherwise be served. A copy is then persisted and counted. On a hit it
+    * is persisted and counted again only when no copy is resident (after a
+    * `clearCache`). A plan the key rejects is returned unpersisted.
+    *
+    * The persisted copy is `boundary` built again in a [[detached]] session:
+    * the CacheManager keeps the plan it caches, and a parquet relation holds
+    * the session that read it, so a copy built in `spark` would keep a
+    * dropped client session reachable. Both plans are the same query, so the
+    * frame returned, built in `spark`, reads the copy. */
+  private[graft] def persistOnce(spark: SparkSession)(
+      boundary: SparkSession => DataFrame): DataFrame = {
+    val df = boundary(spark)
+    stamped(df).foreach { case (key, files) =>
+      val known = metadataOf(spark).persisted
+      val changed = known.get(key) != files
+      if (changed || df.storageLevel == StorageLevel.NONE) {
+        if (changed) df.unpersist(blocking = true)
+        val copy = boundary(detached(spark))
+        copy.persist()
+        copy.count()
+        known.put(key, files)
+      }
     }
+    df
+  }
+
+  /** A new session of `spark`'s context with the engine's functions and
+    * rules and `spark`'s SQL confs. It holds no reference to `spark`. */
+  private def detached(spark: SparkSession): SparkSession = {
+    val owner = EngineSession.adopt(spark.newSession())
+    spark.sessionState.conf.getAllConfs.foreach { case (k, v) =>
+      owner.sessionState.conf.setConfString(k, v)
+    }
+    owner
   }
 
   /** Source bytes below which [[parallelized]] leaves a scan alone. */

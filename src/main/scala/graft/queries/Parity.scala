@@ -45,8 +45,4 @@ object Parity {
     * [[dsum]] — see the conversion note there). */
   def dsumSql(e: String, scale: Int = 2): String =
     s"CAST(CAST(SUM(CAST($e AS DECIMAL(28,$scale))) AS STRING) AS DOUBLE)"
-
-  /** SQL mirror of [[davg]]. */
-  def davgSql(e: String, scale: Int = 2): String =
-    s"(${dsumSql(e, scale)} / COUNT($e))"
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * daemon (many clients, per-session query options, shared catalog), and on
   * Spark those roles map to: one SparkContext, N client sessions via
   * `newSession()` (own conf + temp-view catalog + function registry), and
-  * thread-safe shared operator state (the memoized cluster table, the
-  * per-session view registry in [[Tables.ensureViews]]).
+  * thread-safe shared engine state (the per-session view registry in
+  * [[Tables.ensureViews]] and table metadata in [[Tables]]).
   *
   * These tests pin three properties a multi-tenant deployment relies on:
   *  1. concurrent catalog entries on ONE session return serial-identical
@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *  3. per-client sessions isolate their CATALOG — two clients pointing
   *     their views at different data dirs each read their own;
   *  4. the engine's per-session registries (views, table metadata, corpus
-  *     statistics) do not keep a dropped client session alive.
+  *     statistics, persisted pipeline boundaries) do not keep a dropped
+  *     client session alive.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -117,6 +118,9 @@ class ConcurrencySpec extends SparkSpec {
       val emb = Tables.load(client, dir, "embeddings")
       operators.Similarity.lshTopK(emb.filter(col("vec_id") < 10),
         emb.filter(col("vec_id") >= 10), "vec_id", "embedding", 3)
+      // and the file stamps of its persisted pipeline boundaries
+      for (n <- Seq("q_split_leakage_safe", "q_pipeline_e2e"))
+        assert(SparkEntry.queries(n)(client, dir).collect().nonEmpty, n)
       new java.lang.ref.WeakReference(client)
     }
     val ref = adoptAndDrop()

@@ -5,8 +5,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.Similarity
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
@@ -14,7 +14,8 @@ import org.apache.spark.sql.internal.SQLConf
   * once per session and reused while the files behind its path and the
   * session's inference confs are unchanged; parquet row-group counts live in
   * the same cache under the same file stamps, and so are collected corpus
-  * statistics (the LSH dim-means), under their plan as well. Also pins the
+  * statistics (the LSH dim-means), under their plan as well, and so are the
+  * stamps of persisted pipeline boundaries. Also pins the
   * floors' planned split count, read from the Dataset's own plan, to
   * `df.rdd`'s count. */
 class TablesMetadataSpec extends SparkSpec {
@@ -22,18 +23,22 @@ class TablesMetadataSpec extends SparkSpec {
   private val sf001 = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.1"
 
-  /** Runs `body` and counts the Spark jobs it started. A marker job run
-    * afterwards flushes the asynchronous, in-order listener bus: once the
-    * listener sees the marker, every job of `body` has been counted. */
-  private def jobsDuring[T](session: SparkSession)(body: => T): (T, Int) = {
+  /** Runs `body` and counts the Spark jobs it started and the RDD blocks
+    * (persisted partitions) it stored. A marker job run afterwards flushes
+    * the asynchronous, in-order listener bus: once the listener sees the
+    * marker, every job and block of `body` has been counted. */
+  private def observe[T](session: SparkSession)(body: => T): (T, Int, Int) = {
     val sc = session.sparkContext
     val jobs = new AtomicInteger
+    val rddBlocks = new AtomicInteger
     val marker = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null))
           marker.countDown()
         else jobs.incrementAndGet()
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD) rddBlocks.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
@@ -42,8 +47,14 @@ class TablesMetadataSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty("graft.test.marker", null)
       assert(marker.await(60, TimeUnit.SECONDS), "the listener never saw the marker job")
-      (out, jobs.get)
+      (out, jobs.get, rddBlocks.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` and counts the Spark jobs it started. */
+  private def jobsDuring[T](session: SparkSession)(body: => T): (T, Int) = {
+    val (out, jobs, _) = observe(session)(body)
+    (out, jobs)
   }
 
   test("a second load runs no Spark job and returns the same schema") {
@@ -200,5 +211,36 @@ class TablesMetadataSpec extends SparkSpec {
       .select(Similarity.lshBucket(col("embedding"), 6, 64, 0,
         Similarity.planeThresholds(m, 6, 64, 0))).collect().map(_.getLong(0)).toSeq
     assert(buckets(means) != buckets(before))
+  }
+
+  test("persisted pipeline boundaries follow a documents file rewritten in place, in every session") {
+    val base = Files.createTempDirectory("tables_meta_docs")
+    val live = Files.createDirectories(base.resolve("live"))
+    val target = live.resolve("documents.parquet")
+    Files.copy(Paths.get(sf001, "documents.parquet"), target)
+    // both entries persist a stage boundary through Tables.persistOnce
+    def run(session: SparkSession, dir: java.nio.file.Path): Seq[Seq[Row]] =
+      Seq("q_pipeline_e2e", "q_split_leakage_safe")
+        .map(n => SparkEntry.queries(n)(session, dir.toString).collect().toSeq)
+    val session = EngineSession.adopt(spark.newSession())
+    val (before, _, firstBlocks) = observe(session)(run(session, live))
+    assert(firstBlocks > 0, "setup: the first calls should persist their boundaries")
+    // unchanged files: the second calls read the persisted boundaries
+    val (again, _, againBlocks) = observe(session)(run(session, live))
+    assert(againBlocks === 0, "a repeated call with unchanged files materialized its boundary again")
+    assert(again === before)
+
+    // half the rows, written over the same path
+    writeTable(target, spark.read.parquet(target.toString).filter(col("doc_id") % 2 === 0))
+    // the same entries over a copy of the rewritten file at a path never cached
+    val fresh = Files.createDirectories(base.resolve("fresh"))
+    Files.copy(target, fresh.resolve("documents.parquet"))
+    val expected = run(EngineSession.adopt(spark.newSession()), fresh)
+    assert(expected.zip(before).forall { case (e, b) => e != b },
+      "setup: the rewrite should change both results")
+
+    assert(run(session, live) === expected, "the same session served the boundary of the old file")
+    assert(run(EngineSession.adopt(spark.newSession()), live) === expected,
+      "a new session served the boundary of the old file")
   }
 }
