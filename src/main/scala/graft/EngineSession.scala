@@ -19,6 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - AQE on: runtime re-planning replaces the reference's static
   *    broadcast-vs-shuffle decision (fe/.../planner/DistributedPlanner.java:284-309)
   *    with a strictly better runtime one.
+  *  - [[Tables.SmallSort]]: a global sort over a small run-time input sorts
+  *    in one partition, with no range exchange and no sampling job, as the
+  *    reference's root sort merges locally sorted runs at the coordinator
+  *    instead of sampling (be/src/exec/exchange-node.h, `is_merging_`).
   */
 object EngineSession {
 
@@ -117,8 +121,13 @@ object EngineSession {
       // batch, which runs BEFORE RewriteDistinctAggregates — so the
       // APPX_COUNT_DISTINCT rewrite sees multi-distinct aggregates intact
       // (experimental.extraOptimizations would run after expansion and
-      // silently leave them exact).
-      .withExtensions(_.injectOptimizerRule(_ => graft.plans.AppxCountDistinctRewrite))
+      // silently leave them exact). SmallSort joins AQE's query-stage
+      // preparation rules, which run after EnsureRequirements on every
+      // re-plan.
+      .withExtensions { e =>
+        e.injectOptimizerRule(_ => graft.plans.AppxCountDistinctRewrite)
+        e.injectQueryStagePrepRule(_ => Tables.SmallSort)
+      }
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
     clusterConfs(effectiveMaster).foreach { case (k, v) => b.config(k, v) }
@@ -142,9 +151,15 @@ object EngineSession {
     spark
   }
 
-  /** Inject the engine's optimizer rules (idempotent). The only custom rule
-    * is the APPX_COUNT_DISTINCT rewrite — everything else Catalyst already
-    * does (SURVEY §4).
+  /** Inject the engine's optimizer rules (idempotent). The custom rules are
+    * the APPX_COUNT_DISTINCT rewrite and [[Tables.SmallSort]] — everything
+    * else Catalyst already does (SURVEY §4).
+    *
+    * An adopted session cannot take SmallSort: Spark builds a session's
+    * adaptive rules from its extensions, once, when the session state is
+    * built. Such a session keeps the range exchange, with the same rows at
+    * a higher cost. Sessions from `newSession()` of a built session (such
+    * as [[Tables]]' detached sessions) share its extensions and inherit it.
     *
     * Fallback path for ADOPTED sessions only (extensions can't be added to
     * a live session): extraOptimizations run after

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Optimization-round measurement main (guide §1): for each named catalog
   * entry (or the whole catalog), write the `.explain("formatted")` text to
@@ -32,7 +32,6 @@ object PlanDump {
     val stageLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = ()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         val info = s.stageInfo
@@ -69,17 +68,7 @@ object PlanDump {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             val sec = (System.nanoTime() - t0) / 1e9
             spark.sparkContext.setJobDescription(null)
-            // listener events drain asynchronously; poll until the counts
-            // are stable twice in a row (a fixed 300 ms undercounted on a
-            // loaded machine — r12 ADVICE) with a hard 5 s ceiling
-            var snap = (-1, -1, -1)
-            var stable = 0
-            var waited = 0
-            while (stable < 2 && waited < 5000) {
-              Thread.sleep(100); waited += 100
-              val now = (jobs.get, stages.get, tasks.get)
-              if (now == snap) stable += 1 else { stable = 0; snap = now }
-            }
+            org.apache.spark.EngineAccess.drainListeners(spark.sparkContext)
             println(f"PROFILE $name%-28s $sec%7.3f s  jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%5d")
             import scala.jdk.CollectionConverters._
             stageLines.asScala.toSeq.sorted.foreach(println)

@@ -6,8 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, ProjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -259,6 +263,55 @@ object Tables {
     val advisory =
       df.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     if (bytes >= BigInt(cap) * advisory) df else df.repartition(spreadWidth(bytes, cap))
+  }
+
+  /** A global sort over a small run-time input sorts in one partition: no
+    * range exchange samples its input for bounds. Under AQE every global
+    * ORDER BY plans a range exchange, which costs a sampling job (one more
+    * evaluation of the whole input) and a map job, and AQE then reads a
+    * small sorted output as one partition anyway.
+    *
+    * The rule matches a global `SortExec` over the range exchange
+    * `EnsureRequirements` planned for it (a `repartitionByRange` has another
+    * origin and is left alone). It fires only when every leaf below that
+    * exchange is a materialized query stage, so every size it reads was
+    * measured at run time, and the sort input (the logical stats over those
+    * stages) is at most B, the size below which AQE's coalescing reads a
+    * shuffle as one partition: `coalescePartitions.minPartitionSize` while
+    * `coalescePartitions.parallelismFirst` is on (the engine's default),
+    * `advisoryPartitionSizeInBytes` while it is off, and never while
+    * coalescing is off. Then:
+    *  - when the finished stages below total at most B, AQE reads them in
+    *    one task already, so the exchange becomes a one-partition
+    *    `CoalesceExec`: no sampling job and no map job;
+    *  - otherwise it becomes a single-partition shuffle. The map side keeps
+    *    its width, so a floor's spreading still holds, and only the
+    *    sampling job goes.
+    *
+    * Injected by [[EngineSession.build]] as a query-stage preparation rule,
+    * which AQE runs after `EnsureRequirements` on every re-plan. */
+  object SmallSort extends Rule[SparkPlan] {
+    def apply(plan: SparkPlan): SparkPlan = oneTaskBytes.fold(plan) { bound =>
+      plan.transformUp {
+        case sort @ SortExec(_, true, ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
+            if child.collectLeaves().forall {
+              case s: QueryStageExec => s.isMaterialized
+              case _ => false
+            } && child.logicalLink.exists(_.stats.sizeInBytes <= bound) =>
+          val stages = child.collectLeaves()
+            .map(_.asInstanceOf[QueryStageExec].getRuntimeStatistics.sizeInBytes).sum
+          sort.withNewChildren(Seq(
+            if (stages <= bound) CoalesceExec(1, child)
+            else ShuffleExchangeExec(SinglePartition, child, ENSURE_REQUIREMENTS)))
+      }
+    }
+
+    /** B: the shuffle size AQE's coalescing reads as one partition. */
+    private def oneTaskBytes: Option[Long] =
+      if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) None
+      else if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+        Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+      else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
   }
 
   private def floored(df: DataFrame, gateBytes: Long): DataFrame = {

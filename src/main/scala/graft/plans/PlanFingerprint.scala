@@ -85,6 +85,7 @@ object PlanFingerprint {
     case _: WindowGroupLimitExec      => Some("WINLIMIT")
     case _: ExpandExec                => Some("EXPAND")
     case _: GenerateExec              => Some("GEN")
+    case _: CoalesceExec              => Some("COALESCE")
     case _: CollectLimitExec          => Some("CLIMIT")
     case _: GlobalLimitExec           => Some("GLIMIT")
     case f: FileSourceScanExec =>

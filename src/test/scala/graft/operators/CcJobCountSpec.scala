@@ -1,7 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
+import org.apache.spark.EngineAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
@@ -18,25 +17,16 @@ class CcJobCountSpec extends SparkSpec {
     * scheduler pipelining, not a driver round-trip. */
   private def countActions(body: => Unit): Int = {
     val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
         Option(jobStart.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
           .foreach(ids.add)
-      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      // the listener bus is async (and private); poll until the job
-      // counter stabilizes instead of draining it
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 40) {
-        last = jobs.get(); spins += 1; Thread.sleep(50)
-      }
+      EngineAccess.drainListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     ids.size()
   }
