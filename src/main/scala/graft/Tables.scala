@@ -314,16 +314,18 @@ object Tables {
       else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
   }
 
+  /** Both conditions must hold to spread, so the cheap one goes first: an
+    * under-gate source costs no physical planning and no footer read. */
   private def floored(df: DataFrame, gateBytes: Long): DataFrame = {
+    val bytes = leafBytes(df)
+    if (bytes < gateBytes) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val parts = plannedSplits(df)
     // None (non-parquet or local leaves) falls back to the planned count
     val working = sourceRowGroups(df).fold(parts.toLong)(math.min(parts.toLong, _))
     val hasFilter = df.queryExecution.optimizedPlan.find(_.isInstanceOf[Filter]).isDefined
     val need = if (hasFilter) 2L * cores else cores.toLong
-    if (working >= need) return df
-    val bytes = leafBytes(df)
-    if (bytes < gateBytes) df else df.repartition(spreadWidth(bytes, math.max(cores, parts)))
+    if (working >= need) df else df.repartition(spreadWidth(bytes, math.max(cores, parts)))
   }
 
   /** The partitions `df` reads its source in, taken from its own physical

@@ -67,7 +67,15 @@ object Similarity {
   }
 
   /** Deterministic ±1 hyperplane weights: nothing random at runtime, the
-    * planes are a pure function of (plane index, dimension). */
+    * planes are a pure function of (plane index, dimension).
+    *
+    * Known defect, kept as is because every candidate set and recall pin
+    * depends on it: FNV-1a multiplies by an odd prime, so the low bit of
+    * `hashLongBits` is the seed's low bit XOR the low bits of the input
+    * bytes, and for these inputs the sign is the parity of `p + d`. Every
+    * plane is therefore ± the same alternating vector: odd planes' bits are
+    * the complements of even planes' bits, every vector lands in one of two
+    * buckets, and every table repeats the same split. */
   private def planeWeight(p: Int, dims: Int): Seq[Double] =
     (0 until dims).map { d =>
       val h = graft.functions.FnvHash64.hashLongBits((p.toLong << 32) | d.toLong, 8)
@@ -75,20 +83,23 @@ object Similarity {
     }
 
   /** Sign-LSH bucket id: bit b set iff dot(v, plane_b) >= threshold_b.
-    * `table` selects an independent plane family (plane indices offset by
-    * table*planes) and namespaces the bucket ids so tables never collide.
+    * `table` selects a plane family (plane indices offset by table*planes)
+    * and namespaces the bucket ids so tables never collide. Each plane is
+    * one array literal, not an array of `dims` literals: the expression
+    * tree stays small for analysis, optimization and every AQE re-plan.
     *
     * `thresholds` mean-centers the hash: for non-centered embeddings (a
     * large shared mean component — true of most real embedding models and
-    * of the synthetic corpus) every origin-crossing hyperplane computes
-    * the SAME two-way split, collapsing all buckets into two complementary
-    * ids. Centering on the corpus mean is the standard fix, and by
-    * linearity it reduces to the scalar per-plane threshold dot(mean, w).
+    * of the synthetic corpus) origin-crossing hyperplanes tend to split the
+    * data the same way. Centering on the corpus mean is the standard fix,
+    * and by linearity it reduces to the scalar per-plane threshold
+    * dot(mean, w). (The buckets still collapse to two complementary ids
+    * here, but because the planes are one plane: see [[planeWeight]].)
     */
   def lshBucket(vec: Column, planes: Int, dims: Int, table: Int = 0,
       thresholds: Seq[Double] = Nil): Column = {
     val signBits = (0 until planes).map { p =>
-      val w = array(planeWeight(table * planes + p, dims).map(lit): _*)
+      val w = typedLit(planeWeight(table * planes + p, dims))
       val thr = if (thresholds.isEmpty) 0.0 else thresholds(p)
       when(dot(vec, w) >= thr, lit(1L << p)).otherwise(lit(0L))
     }
@@ -119,13 +130,14 @@ object Similarity {
     * construction (documented); `planes` tunes the recall/cost point.
     *
     * `tables` (the classic L-tables trade) only buys recall when the
-    * plane families cut the data DIFFERENTLY. On a corpus whose variance
-    * is dominated by one cluster direction, every centered hyperplane's
-    * sign follows cluster membership and all families collapse to the
-    * same two complementary buckets — measured on the synthetic corpus:
-    * tables=1/2/4 yield byte-identical candidate sets. Cross-cluster
-    * neighbors are then unreachable by ANY sign-LSH configuration; use
-    * the IVF variant (data-adaptive centroids, nProbe>1) for that regime.
+    * plane families cut the data DIFFERENTLY. Today they cannot: every
+    * plane is ± one alternating vector ([[planeWeight]]), so every table
+    * makes the same two-way split and tables=1/2/4 yield byte-identical
+    * candidate sets. The IVF variant (data-adaptive centroids, nProbe>1)
+    * reaches the cross-split neighbors this misses.
+    *
+    * Each query's own bucket is projected once per table, and its hamming-1
+    * probes XOR that column instead of re-deriving the bucket expression.
     *
     * Ids are unique on each side: `idCol` names one row of `queries` and one
     * row of `corpus`. With one table the bucket join then yields each
@@ -143,13 +155,15 @@ object Similarity {
     val mean = dimMeans(corpus, vecCol)
     val thrs = (0 until tables).map(t => planeThresholds(mean, planes, dims, t))
     // query probes: per table, own bucket (+ hamming-1 flips when probing)
-    val probeBuckets = array((0 until tables).flatMap { t =>
-      val own = lshBucket(col(vecCol), planes, dims, t, thrs(t))
-      if (multiProbe) own +: (0 until planes).map(p => own.bitwiseXOR(lit(1L << p)))
-      else Seq(own)
+    val owns = (0 until tables).map(t => s"own$t")
+    val probeBuckets = array(owns.flatMap { o =>
+      if (multiProbe) col(o) +: (0 until planes).map(p => col(o).bitwiseXOR(lit(1L << p)))
+      else Seq(col(o))
     }: _*)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(probeBuckets).as("bucket"))
+    val q = queries.select(col(idCol).as("query_id") +: col(vecCol).as("qv") +:
+        owns.zipWithIndex.map { case (o, t) =>
+          lshBucket(col(vecCol), planes, dims, t, thrs(t)).as(o) }: _*)
+      .select(col("query_id"), col("qv"), explode(probeBuckets).as("bucket"))
     // corpus: one bucket per table per vector (the classic L-tables
     // space-for-recall trade: index size × L, candidates still bucket-join)
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
@@ -332,8 +346,7 @@ object Similarity {
     * all-pairs verification kernel for bounded slices.
     *
     * Scale shape (mirrors the minhash kernel stage for stage):
-    *  1. mean-centered buckets ([[lshBucket]] doc: uncentered sign-LSH
-    *     collapses to two buckets on shared-mean embeddings);
+    *  1. mean-centered buckets ([[lshBucket]] doc);
     *  2. hot-bucket cap: home buckets above `maxBucket` vectors are
     *     knocked out by a broadcast anti join (the same bounded-work /
     *     recall trade as minhash `maxBucket` and ngram `maxPosting`);
@@ -346,12 +359,11 @@ object Similarity {
     *     the exact cosine verify — wide embedding arrays never ride the
     *     candidate dedup shuffle.
     *
-    * Regime caveat (same as [[lshTopK]]): on a corpus whose variance is
-    * dominated by one cluster direction, every centered hyperplane cuts
-    * along that direction and the buckets collapse to two complementary
-    * halves — measured on the synthetic corpus, where the cap then
-    * knocks out half the population. Use [[ivfNearDupPairs]]
-    * (data-adaptive centroids) in that regime. */
+    * Caveat (same as [[lshTopK]]): every plane is ± one alternating
+    * vector ([[planeWeight]]), so the buckets collapse to two
+    * complementary halves on any corpus; on the synthetic corpus the cap
+    * then knocks out half the population. [[ivfNearDupPairs]]
+    * (data-adaptive centroids) does not share the defect. */
   def cosineNearDupPairs(
       vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planes: Int = 6, dims: Int = 64,
@@ -386,13 +398,11 @@ object Similarity {
     * sample as [[ivfTopK]]), every vector assigned to its nearest
     * centroid, candidates from the bucket equi-join, exact cosine verify.
     *
-    * This is the near-dup kernel of choice when the corpus' variance is
-    * dominated by cluster structure: sign-LSH hyperplanes all cut along
-    * the dominant direction and collapse to two complementary buckets
-    * (measured on the synthetic corpus — [[lshTopK]] doc), while
-    * data-adaptive centroids put each tight family in one bucket.
-    * [[cosineNearDupPairs]] remains the oblivious-hash alternative for
-    * corpora without that structure.
+    * This is the near-dup kernel of choice while the sign-LSH planes are
+    * one plane: [[cosineNearDupPairs]]' buckets collapse to two
+    * complementary halves ([[planeWeight]]), while data-adaptive centroids
+    * put each tight family in one bucket. [[cosineNearDupPairs]] remains
+    * the oblivious-hash alternative.
     *
     * Scale shape: centroid fit is bounded (100k-sample cap), assignment
     * is one broadcast-centroid pass, buckets above `maxBucket` are

@@ -279,10 +279,10 @@ object LlmOps {
   /** The scale path for embedding near-dup: IVF-bucketed candidates
     * (deterministic k-means centroids, hot-bucket cap) verified by exact
     * cosine — data-adaptive buckets because sign-LSH collapses to two
-    * complementary buckets on this corpus (measured: the centered
-    * 6-plane home index has exactly 2 distinct values at sf1, and the
-    * hot-bucket cap then knocks out half the population; see
-    * Similarity.cosineNearDupPairs regime caveat). Gated-exact entry
+    * complementary buckets (measured: the centered 6-plane home index has
+    * exactly 2 distinct values at sf1, and the hot-bucket cap then knocks
+    * out half the population), as its planes are one plane on any corpus
+    * (see Similarity.planeWeight). Gated-exact entry
     * shape (the
     * [[annGatedExact]] pattern), aggregated to ONE row because the corpus
     * plants near-dup families only at sf1+ (max pairwise cosine at the
@@ -482,13 +482,11 @@ object LlmOps {
 
   private def annTopK(queries: DataFrame, corpus: DataFrame, which: String,
       k: Int): DataFrame = which match {
-    // tables=1 deliberately: on the synthetic two-cluster corpus every
-    // centered hyperplane family computes the SAME two-way split (measured:
-    // tables 1/2/4 produce byte-identical candidate sets — each table's
-    // corpus collapses to the two complementary sign patterns), so extra
-    // tables are pure cost here. The recall misses are cross-cluster true
-    // neighbors, which IVF's nProbe>1 does recover — that is exactly the
-    // structural difference the two entries exist to demonstrate.
+    // tables=1 deliberately: every plane is ± one alternating vector (an
+    // FNV-1a low-bit defect, see Similarity.planeWeight), so every table
+    // computes the SAME two-way split (tables 1/2/4 produce byte-identical
+    // candidate sets) and extra tables are pure cost. The recall misses are
+    // true neighbors across that split, which IVF's nProbe>1 does recover.
     case "lsh" => Similarity.lshTopK(queries, corpus, "vec_id", "embedding", k)
     // Auto-sized (r12): nCentroids ≈ sqrt(corpus), nProbe at a 1/3 probe
     // fraction (see ivfTopK's sizing doc — measured 26/27/22 of 30 at
@@ -523,7 +521,9 @@ object LlmOps {
     * verdict. The expensive exact subtree (corpus cross-join + cosine +
     * rank) therefore appears exactly ONCE in the plan, the window runs
     * over nQueries*k rows (tiny by construction), and there is no
-    * driver-side action. */
+    * driver-side action. The ANN hits (also nQueries*k rows) are the
+    * broadcast build side, so the join's plan, and the entry's job count,
+    * do not depend on which side AQE sees finish first. */
   private[graft] def annGatedExact(spark: SparkSession, dir: String, which: String,
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -533,7 +533,7 @@ object LlmOps {
     val ann = annTopK(queries, corpus, which, k)
     val whole = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     exact
-      .join(ann.select(col("query_id"), col("cand_id"), lit(1).as("hit")),
+      .join(broadcast(ann.select(col("query_id"), col("cand_id"), lit(1).as("hit"))),
         Seq("query_id", "cand_id"), "left_outer")
       .withColumn("recall_ok",
         sum(coalesce(col("hit"), lit(0))).over(whole).cast("double") >=

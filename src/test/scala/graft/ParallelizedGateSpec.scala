@@ -163,4 +163,34 @@ class ParallelizedGateSpec extends SparkSpec {
       spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
     }
   }
+
+  /** The floor spreads only when the source reaches the gate AND its
+    * working splits fall short of the cores, so it compares the bytes with
+    * the gate first. Below the gate it returns the very DataFrame it was
+    * given, whatever the split count; between the two gates only the heavy
+    * floor spreads. */
+  test("an under-gate source comes back as the same DataFrame from either floor") {
+    val dir = java.nio.file.Files.createTempDirectory("par_under").toString
+    // one file, one row group, between the 256 KB and the 4 MB gate
+    spark.range(20000)
+      .select(col("id"), concat(md5(col("id").cast("string")),
+        sha1(col("id").cast("string"))).as("payload"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    val mid = spark.read.parquet(dir)
+    val bytes = Tables.leafBytes(mid)
+    assert(bytes >= 256 * 1024 && bytes < 4L * 1024 * 1024,
+      s"setup: file should sit between the two gates, got $bytes")
+    val cores = spark.sparkContext.defaultParallelism
+    assert(mid.rdd.getNumPartitions < cores, "setup: fewer splits than cores")
+    assert(Tables.parallelized(mid) eq mid)
+    assert(Tables.parallelizedHeavy(mid).rdd.getNumPartitions === cores,
+      "the heavy gate sits below this file, so its floor spreads it")
+
+    val tinyDir = java.nio.file.Files.createTempDirectory("par_under_tiny").toString
+    spark.range(100).coalesce(1).write.mode("overwrite").parquet(tinyDir)
+    val tiny = spark.read.parquet(tinyDir)
+    assert(Tables.parallelized(tiny) eq tiny)
+    assert(Tables.parallelizedHeavy(tiny) eq tiny)
+  }
 }

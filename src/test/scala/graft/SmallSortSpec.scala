@@ -125,4 +125,11 @@ class SmallSortSpec extends SparkSpec {
     assert(jobsPerCollect("q_text_stats") == 3)
     assert(jobsPerCollect("q5_multijoin") == 7)
   }
+
+  /** The recall join broadcasts the ANN hits, so its plan does not wait on
+    * which side finishes first. */
+  test("jobs per collect: q_sim_search_lsh runs the same jobs every time") {
+    val counts = (1 to 10).map(_ => jobsPerCollect("q_sim_search_lsh"))
+    assert(counts.forall(_ == 7), counts.mkString(", "))
+  }
 }
