@@ -19,16 +19,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - AQE on: runtime re-planning replaces the reference's static
   *    broadcast-vs-shuffle decision (fe/.../planner/DistributedPlanner.java:284-309)
   *    with a strictly better runtime one.
-  *  - [[Tables.SmallSort]]: a global sort over a small run-time input sorts
-  *    in one partition, with no range exchange and no sampling job, as the
-  *    reference's root sort merges locally sorted runs at the coordinator
-  *    instead of sampling (be/src/exec/exchange-node.h, `is_merging_`).
+  *  - [[Tables.SmallSort]]: a global sort over a small input (finished
+  *    stages or small file scans) sorts in one partition, with no range
+  *    exchange and no sampling job, as the reference's root sort merges
+  *    locally sorted runs at the coordinator instead of sampling
+  *    (be/src/exec/exchange-node.h, `is_merging_`).
+  *
+  * A session takes these confs once: [[build]] sets them on the builder,
+  * and [[adopt]] applies them to a session the first time it sees it. A
+  * later `SET` in the session holds, also across catalog entries, which
+  * all route through [[adopt]].
   */
 object EngineSession {
 
   /** Spark confs that define the engine's semantics & scale posture.
     * Applied both when we build the session ourselves and (where dynamic)
-    * when we adopt an externally-built session.
+    * when we first adopt an externally-built session.
     */
   val staticConfs: Map[String, String] = Map(
     "spark.sql.ansi.enabled" -> "false",
@@ -153,7 +159,9 @@ object EngineSession {
 
   /** Inject the engine's optimizer rules (idempotent). The custom rules are
     * the APPX_COUNT_DISTINCT rewrite and [[Tables.SmallSort]] — everything
-    * else Catalyst already does (SURVEY §4).
+    * else Catalyst already does (SURVEY §4). SmallSort reads the session's
+    * AQE coalescing confs on every plan, so a `SET` of them, made before
+    * or after a catalog entry is built, decides whether it fires.
     *
     * An adopted session cannot take SmallSort: Spark builds a session's
     * adaptive rules from its extensions, once, when the session state is
@@ -200,16 +208,22 @@ object EngineSession {
 
   /** Adopt an externally-created session (e.g. the driver's): apply the
     * dynamic confs and register the dialect functions, without restarting.
+    * The confs are applied once per session, at its first adopt (a built
+    * session took them from its builder): every catalog entry adopts the
+    * session it runs in, and re-applying them there would revert the
+    * session's own `SET`s.
     */
   def adopt(spark: SparkSession): SparkSession = {
-    (staticConfs ++ extraConfs).foreach { case (k, v) =>
-      try spark.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () } // static conf on live session
-    }
+    if (!builtSessions.containsKey(spark))
+      adoptedSessions.computeIfAbsent(spark, { s =>
+        (staticConfs ++ extraConfs).foreach { case (k, v) =>
+          try s.conf.set(k, v)
+          catch { case _: org.apache.spark.sql.AnalysisException => () } // static conf on live session
+        }
+        java.lang.Boolean.TRUE
+      })
     Dialect.registerAll(spark)
     installRules(spark)
-    if (!builtSessions.containsKey(spark))
-      adoptedSessions.put(spark, java.lang.Boolean.TRUE)
     spark
   }
 

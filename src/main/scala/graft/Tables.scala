@@ -5,15 +5,19 @@ import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Ex
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, ProjectExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, LeafExecNode, ProjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -265,46 +269,91 @@ object Tables {
     if (bytes >= BigInt(cap) * advisory) df else df.repartition(spreadWidth(bytes, cap))
   }
 
-  /** A global sort over a small run-time input sorts in one partition: no
-    * range exchange samples its input for bounds. Under AQE every global
-    * ORDER BY plans a range exchange, which costs a sampling job (one more
+  /** A global sort over a small input sorts in one partition: no range
+    * exchange samples its input for bounds. Under AQE every global ORDER BY
+    * plans a range exchange, which costs a sampling job (one more
     * evaluation of the whole input) and a map job, and AQE then reads a
     * small sorted output as one partition anyway.
     *
     * The rule matches a global `SortExec` over the range exchange
     * `EnsureRequirements` planned for it (a `repartitionByRange` has another
-    * origin and is left alone). It fires only when every leaf below that
-    * exchange is a materialized query stage, so every size it reads was
-    * measured at run time, and the sort input (the logical stats over those
-    * stages) is at most B, the size below which AQE's coalescing reads a
+    * origin and is left alone). It walks down from that exchange and stops
+    * at query stages; every leaf it reaches must be a materialized query
+    * stage or a file scan, and an exchange that has not become a finished
+    * stage means "not yet" (AQE re-plans once it finishes). Every size it
+    * reads is measured or exact: a shuffle or cache stage's run-time size
+    * and a scan's file-index bytes, the number [[leafBytes]] trusts. A
+    * broadcast stage counts nothing: every task reads it whole, so it
+    * decides neither how many tasks the input runs in nor, below a semi or
+    * anti join, how many rows reach the sort (and its run-time size is its
+    * hash table's memory: a long-keyed one reserves a 1 MB page however few
+    * rows it holds). The sort input (the logical stats over those leaves)
+    * must be at most B, the size below which AQE's coalescing reads a
     * shuffle as one partition: `coalescePartitions.minPartitionSize` while
     * `coalescePartitions.parallelismFirst` is on (the engine's default),
     * `advisoryPartitionSizeInBytes` while it is off, and never while
-    * coalescing is off. Then:
-    *  - when the finished stages below total at most B, AQE reads them in
-    *    one task already, so the exchange becomes a one-partition
-    *    `CoalesceExec`: no sampling job and no map job;
+    * coalescing is off.
+    *
+    * A scan's file bytes bound the sort input only through operators that
+    * emit at most one row per input row (Spark's size-only stats pass a
+    * `Generate`'s input size through unchanged, so they cannot bound one).
+    * So over a scan the rule fires only when every operator between the
+    * exchange and its leaves is a Project, a Filter or a left semi or anti
+    * join that streams its left side, and the leaves total at most B; over
+    * finished stages alone, whatever sits between them. Then:
+    *  - when the input already runs in one task (the leaves total at most
+    *    B and each scan plans one split), the exchange becomes a
+    *    one-partition `CoalesceExec`: no sampling job and no map job;
     *  - otherwise it becomes a single-partition shuffle. The map side keeps
     *    its width, so a floor's spreading still holds, and only the
     *    sampling job goes.
     *
     * Injected by [[EngineSession.build]] as a query-stage preparation rule,
-    * which AQE runs after `EnsureRequirements` on every re-plan. */
+    * which AQE runs after `EnsureRequirements` on the initial plan and on
+    * every re-plan. */
   object SmallSort extends Rule[SparkPlan] {
     def apply(plan: SparkPlan): SparkPlan = oneTaskBytes.fold(plan) { bound =>
       plan.transformUp {
         case sort @ SortExec(_, true, ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
-            if child.collectLeaves().forall {
-              case s: QueryStageExec => s.isMaterialized
-              case _ => false
-            } && child.logicalLink.exists(_.stats.sizeInBytes <= bound) =>
-          val stages = child.collectLeaves()
-            .map(_.asInstanceOf[QueryStageExec].getRuntimeStatistics.sizeInBytes).sum
-          sort.withNewChildren(Seq(
-            if (stages <= bound) CoalesceExec(1, child)
-            else ShuffleExchangeExec(SinglePartition, child, ENSURE_REQUIREMENTS)))
+            if child.logicalLink.exists(_.stats.sizeInBytes <= bound) =>
+          oneTask(child, bound).fold[SparkPlan](sort) { single =>
+            sort.withNewChildren(Seq(
+              if (single) CoalesceExec(1, child)
+              else ShuffleExchangeExec(SinglePartition, child, ENSURE_REQUIREMENTS)))
+          }
       }
     }
+
+    /** Whether `input` runs in one task, or None when the rule must keep
+      * the range exchange over it. */
+    private def oneTask(input: SparkPlan, bound: Long): Option[Boolean] = {
+      val leaves = input.collectLeaves()
+      val stages = leaves.collect { case s: QueryStageExec if s.isMaterialized => s }
+      val scans = leaves.collect { case s: FileSourceScanExec => s }
+      val total = stages.filterNot(_.isInstanceOf[BroadcastQueryStageExec])
+        .map(_.getRuntimeStatistics.sizeInBytes).sum + scans.map(s => BigInt(s.relation.sizeInBytes)).sum
+      val ready = stages.size + scans.size == leaves.size && input.find(_.isInstanceOf[Exchange]).isEmpty
+      if (!ready || scans.nonEmpty && (total > bound || input.find(!narrow(_)).isDefined)) None
+      else Some(total <= bound && scans.forall(oneSplit))
+    }
+
+    /** At most one output row per input row. A nested-loop semi or anti
+      * join that builds its left side emits build rows, which the
+      * broadcast decides. */
+    private def narrow(p: SparkPlan): Boolean = p match {
+      case _: ProjectExec | _: FilterExec | _: LeafExecNode => true
+      case j: BroadcastNestedLoopJoinExec if j.buildSide == BuildLeft => false
+      case j: BaseJoinExec => j.joinType == LeftSemi || j.joinType == LeftAnti
+      case _ => false
+    }
+
+    /** One planned split, read as [[plannedSplits]] does. A scan filtered
+      * by a subquery (a dynamic partition filter, or a scalar subquery
+      * pushed into the scan) plans its splits only once that subquery has
+      * run, so it counts as more. */
+    private def oneSplit(scan: FileSourceScanExec): Boolean =
+      !(scan.partitionFilters ++ scan.dataFilters).exists(_.exists(_.isInstanceOf[PlanExpression[_]])) &&
+        scan.inputRDD.getNumPartitions <= 1
 
     /** B: the shuffle size AQE's coalescing reads as one partition. */
     private def oneTaskBytes: Option[Long] =

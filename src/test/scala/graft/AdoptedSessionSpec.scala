@@ -124,6 +124,27 @@ class AdoptedSessionSpec extends SparkSpec {
     assert(EngineSession.sql(adopted, sql).collect()(0).getLong(0) === 100L)
   }
 
+  test("a SET made before building a catalog entry holds for that query") {
+    // Every entry adopts the session it runs in, so only a session's first
+    // adopt may apply the engine's confs: a later one would revert its SETs.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val aqe = "spark.sql.adaptive.enabled"
+    val client = spark.newSession()
+    client.conf.set(aqe, "false")
+    EngineSession.adopt(client)
+    assert(client.conf.get(aqe) === "true", "the first adopt applies the engine's confs")
+    for (session <- Seq(spark, client)) {
+      val prev = session.conf.get(aqe)
+      session.conf.set(aqe, "false")
+      try {
+        val df = SparkEntry.queries("q_fn_string")(session, "perfbench/data/sf0.1")
+        assert(session.conf.get(aqe) === "false", "building the entry reverted the SET")
+        assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+        assert(df.collect().nonEmpty)
+      } finally session.conf.set(aqe, prev)
+    }
+  }
+
   test("SPARK_GRAFT_EXTRA_CONF parses k=v;k=v, trims, and rejects malformed entries") {
     // The deployment-tuning knob behind the config-axis sweeps: values may
     // contain '=' (only the first splits), blanks between ';' are ignored.

@@ -155,12 +155,13 @@ class LlmOpsSpec extends SparkSpec {
     // (broken bucketing, wrong re-rank, lost candidates) fails loudly.
     //
     // IVF (data-adaptive centroids) reaches 0.9+ on this corpus. Sign-LSH
-    // structurally CANNOT here: the corpus is two diffuse clusters whose
-    // offset direction dominates every ±1 projection, so all planes (and
-    // all tables) reproduce the same two-way cluster split — recall
-    // saturates at the same-half fraction (~0.66) for any planes/tables
-    // config (measured invariant). That is the classic oblivious-vs-
-    // adaptive ANN gap, and exactly why both paths exist.
+    // does not, and the corpus is not the cause: its hyperplanes are one
+    // plane. `Similarity.planeWeight` takes each weight's sign from the low
+    // bit of an FNV-1a hash, which is the parity of p + d, so every plane
+    // (and every table) is ± the same alternating vector and every vector
+    // lands in one of two complementary buckets. Recall therefore saturates
+    // at the same-bucket fraction (~0.66) for any planes/tables config. A
+    // sign from a mixed hash bit moves these pins with it.
     val ivf = recallOf(topSets(
       Similarity.ivfTopK(queries, emb, "vec_id", "embedding", k, nCentroids = 16, nProbe = 10)))
     val lsh = recallOf(topSets(
